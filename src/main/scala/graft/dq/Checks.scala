@@ -5,28 +5,38 @@ import graft.ops.Relational
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Data-quality / reconciliation operators — the §2B inventory. Each check
   * returns a [[ValidationResult]] (the reference appends PASS/FAIL rows to
   * *_TEST_LOG tables — `KafkaDemo.sh:133-143`); the DataFrame-shaped variants
   * also expose offending rows for inspection.
   *
-  * Scale note: every check is a single distributed job (aggregate or
-  * anti-join); none round-trips data through the driver the way the
-  * reference's CSV-diff flow does (`KafkaScript_ConformToStaging.sh:210-219`).
+  * Shape of each check: none round-trips data through the driver the way
+  * the reference's CSV-diff flow does (`KafkaScript_ConformToStaging.sh:210-219`),
+  * but they are not all one job:
+  *  - [[countMatch]]: one aggregate over the union of both sides' row tags;
+  *  - [[dataMatch]]: two `except` anti-joins plus a limit-1 probe — several
+  *    jobs, both sides shuffled at full width twice;
+  *  - [[duplicateCheck]]: a group-by-all aggregate plus a limit-1 probe;
+  *  - [[nullCheck]]: a filter plus a limit-1 probe;
+  *  - [[standardStageChecks]]: all four of the above as ONE grouped
+  *    aggregate, each side scanned and shuffled once (see its doc);
+  *  - the offset, profile and diff checks each state their scale shape.
   */
 object Checks {
 
   /** Count reconciliation source vs target
-    * (`KafkaScript_ConformToStaging.sh:222-246`). Two scans, no shuffle
-    * beyond the count partials.
+    * (`KafkaScript_ConformToStaging.sh:222-246`). One action: both sides
+    * project to literal (source, target) tags, no columns read, and one
+    * aggregate sums them.
     */
   def countMatch(source: DataFrame, target: DataFrame, sourceName: String,
                  stage: String): ValidationResult = {
-    val s = source.count()
-    val t = target.count()
-    ValidationResult.of(sourceName, stage, "count_match", "count_reconciliation",
-      s == t, s"source=$s target=$t")
+    val r = source.select(lit(1L).as("ns"), lit(0L).as("nt"))
+      .union(target.select(lit(0L).as("ns"), lit(1L).as("nt")))
+      .agg(coalesce(sum(col("ns")), lit(0L)), coalesce(sum(col("nt")), lit(0L))).head()
+    countResult(r.getLong(0), r.getLong(1), sourceName, stage)
   }
 
   /** Exact data match via both-direction set difference — the MINUS-based
@@ -38,9 +48,7 @@ object Checks {
   def dataMatch(source: DataFrame, target: DataFrame, sourceName: String,
                 stage: String): ValidationResult = {
     val diff = Relational.symmetricDiff(source, target)
-    val mismatch = diff.limit(1).count()
-    ValidationResult.of(sourceName, stage, "data_match", "minus_both_directions",
-      mismatch == 0, if (mismatch == 0) "exact match" else "symmetric difference non-empty")
+    dataResult(diff.limit(1).count(), sourceName, stage)
   }
 
   /** Data match by content hash — the scale path for the same validation:
@@ -78,11 +86,8 @@ object Checks {
     * (`FACT_AUTOMATION.sh:311-363`, shell `sort | uniq -d`
     * `KafkaScript_ConformToStaging.sh:250-279`).
     */
-  def duplicateCheck(df: DataFrame, sourceName: String, stage: String): ValidationResult = {
-    val dups = Relational.duplicateRows(df).limit(1).count()
-    ValidationResult.of(sourceName, stage, "duplicate_check", "group_by_all_having",
-      dups == 0, if (dups == 0) "no duplicates" else "duplicate rows present")
-  }
+  def duplicateCheck(df: DataFrame, sourceName: String, stage: String): ValidationResult =
+    duplicateResult(Relational.duplicateRows(df).limit(1).count(), sourceName, stage)
 
   /** Null check over NOT NULL columns, schema-driven the way the reference is
     * catalog-driven (`fact_dim_merging.sh:282-358`): columns default to the
@@ -92,14 +97,35 @@ object Checks {
                 columns: Seq[String] = Nil): ValidationResult = {
     val cols =
       if (columns.nonEmpty) columns
-      else {
-        val nn = df.schema.fields.filter(!_.nullable).map(_.name).toSeq
-        if (nn.nonEmpty) nn else df.columns.toSeq
-      }
-    val offenders = Relational.nullAudit(df, cols).limit(1).count()
+      else nullCheckColumns(df.schema).map(df.columns(_))
+    nullResult(Relational.nullAudit(df, cols).limit(1).count(), cols, sourceName, stage)
+  }
+
+  /** Positions of the columns [[nullCheck]] checks by default: the
+    * non-nullable fields, or every column when none is non-nullable.
+    */
+  private def nullCheckColumns(schema: StructType): Seq[Int] = {
+    val nn = schema.fields.indices.filter(i => !schema(i).nullable)
+    if (nn.nonEmpty) nn else schema.fields.indices
+  }
+
+  // The four standard audit rows, shared by the single checks and the
+  // fused [[standardStageChecks]] so their strings cannot drift apart.
+  private def countResult(s: Long, t: Long, sourceName: String, stage: String) =
+    ValidationResult.of(sourceName, stage, "count_match", "count_reconciliation",
+      s == t, s"source=$s target=$t")
+
+  private def dataResult(mismatch: Long, sourceName: String, stage: String) =
+    ValidationResult.of(sourceName, stage, "data_match", "minus_both_directions",
+      mismatch == 0, if (mismatch == 0) "exact match" else "symmetric difference non-empty")
+
+  private def duplicateResult(dups: Long, sourceName: String, stage: String) =
+    ValidationResult.of(sourceName, stage, "duplicate_check", "group_by_all_having",
+      dups == 0, if (dups == 0) "no duplicates" else "duplicate rows present")
+
+  private def nullResult(offenders: Long, cols: Seq[String], sourceName: String, stage: String) =
     ValidationResult.of(sourceName, stage, "null_check", "is_null_disjunction",
       offenders == 0, s"columns=${cols.mkString(",")}")
-  }
 
   /** Offset continuity: previous run's max(until_offset) must equal the
     * current run's max(from_offset) per topic/partition
@@ -387,17 +413,72 @@ object Checks {
         col("orphan_rows"), col("unmatched_dim_keys"))
   }
 
-  /** Run all four standard per-stage checks (SURVEY §5.2) and return the
-    * audit rows ready for an append-mode write.
+  /** Run all four standard per-stage checks (SURVEY §5.2) as ONE query and
+    * return the audit rows ready for an append-mode write: the same four
+    * rows, strings included, that [[countMatch]], [[dataMatch]],
+    * [[duplicateCheck]] and [[nullCheck]] (on `target`) return one by one.
+    *
+    * Every row carries its side's weights — source (1, 0), target (0, 1) —
+    * and the two sides are unioned by position, which widens types by the
+    * same rules as `except`. One group-by over every column sums the
+    * weights into (ns, nt) per distinct row, and one global aggregate
+    * folds the groups into five numbers:
+    *  - Σns and Σnt, the row counts (count_match);
+    *  - the groups with (ns > 0) != (nt > 0): exactly the two-way `except`,
+    *    with its set semantics and its null-safe, NaN- and −0.0-normalized
+    *    equality (data_match);
+    *  - the groups with nt > 1: a target row present more than once, bag
+    *    semantics (duplicate_check);
+    *  - the groups with nt > 0 and a null in the null-check columns, the
+    *    target's non-nullable fields or all its columns when none is
+    *    non-nullable (null_check).
+    *
+    * Internal names are positional, so duplicate or `__`-prefixed column
+    * names cannot collide. When widening changes a target column's type
+    * (a long target against a double source maps distinct longs to one
+    * double), the duplicate and null checks must still see the target's
+    * own values: the original column rides along as an extra group key,
+    * null on source rows, and a second group-by on the widened columns
+    * folds those finer groups back before the global fold. Each side is
+    * scanned once and shuffled once.
     */
   def standardStageChecks(spark: SparkSession, source: DataFrame, target: DataFrame,
                           sourceName: String, stage: String): Dataset[ValidationResult] = {
     import spark.implicits._
+    def positional(df: DataFrame): DataFrame = df.toDF(df.columns.indices.map(i => s"c$i"): _*)
+    val (src, tgt) = (positional(source), positional(target))
+    val keys = tgt.columns.toSeq.map(col)
+    // The union's column types (analysis only, no job); a mismatched
+    // column count throws here, as `except` does.
+    val widened = src.union(tgt).schema
+    val retyped = target.schema.fields.indices
+      .filter(i => widened(i).dataType != target.schema(i).dataType)
+    val origs = retyped.map(i => s"o$i")
+    val tagged = src.select(keys ++ retyped.map(i =>
+        lit(null).cast(target.schema(i).dataType).as(s"o$i")) :+
+        lit(1L).as("ns") :+ lit(0L).as("nt"): _*)
+      .union(tgt.select(keys ++ retyped.map(i => col(s"c$i").as(s"o$i")) :+
+        lit(0L).as("ns") :+ lit(1L).as("nt"): _*))
+    val nullCols = nullCheckColumns(target.schema)
+    val anyNull = nullCols
+      .map(i => col(if (retyped.contains(i)) s"o$i" else s"c$i").isNull).reduce(_ || _)
+    val groups = tagged.groupBy(keys ++ origs.map(col): _*)
+      .agg(sum(col("ns")).as("ns"), sum(col("nt")).as("nt"))
+      .select(keys ++ Seq(col("ns"), col("nt"), (col("nt") > 1).as("dup"),
+        (col("nt") > 0 && anyNull).as("nul")): _*)
+    val perRow =
+      if (origs.isEmpty) groups
+      else groups.groupBy(keys: _*).agg(sum(col("ns")).as("ns"), sum(col("nt")).as("nt"),
+        max(col("dup")).as("dup"), max(col("nul")).as("nul"))
+    val r = perRow.agg(
+      coalesce(sum(col("ns")), lit(0L)), coalesce(sum(col("nt")), lit(0L)),
+      count_if((col("ns") > 0) =!= (col("nt") > 0)), count_if(col("dup")),
+      count_if(col("nul"))).head()
     Seq(
-      countMatch(source, target, sourceName, stage),
-      dataMatch(source, target, sourceName, stage),
-      duplicateCheck(target, sourceName, stage),
-      nullCheck(target, sourceName, stage)
+      countResult(r.getLong(0), r.getLong(1), sourceName, stage),
+      dataResult(r.getLong(2), sourceName, stage),
+      duplicateResult(r.getLong(3), sourceName, stage),
+      nullResult(r.getLong(4), nullCols.map(target.columns(_)), sourceName, stage)
     ).toDS()
   }
 }

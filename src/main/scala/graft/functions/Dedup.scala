@@ -211,8 +211,10 @@ object Dedup {
   /** Duplicate-cluster resolution: connected components over candidate
     * pairs by iterated label propagation — each id adopts the minimum label
     * among itself and its neighbors until fixpoint (≤ `maxIter` rounds,
-    * each one join + aggregate; converges in O(log(diameter)) rounds on
-    * near-dup clusters, which are shallow). Returns (id, cluster) where
+    * each one join + aggregate). A label moves one hop per round, so the
+    * fixpoint takes O(diameter) rounds plus one that changes nothing;
+    * near-dup clusters are shallow. Hitting `maxIter` while labels still
+    * change throws [[NotConvergedException]]. Returns (id, cluster) where
     * cluster = min id of the component; `cluster != id` rows are the drop
     * set. This is the step that turns pairwise candidates into one-keeper-
     * per-group semantics at scale without collecting edges to the driver.
@@ -294,6 +296,7 @@ object Dedup {
     var labels: DataFrame = null
     var i = 0
     var converged = false
+    var changed = 0L
     while (i < maxIter && !converged) {
       // Carry the OLD label through so the convergence count is computable
       // on the materializing frame itself: `matCounted`'s observe
@@ -313,15 +316,18 @@ object Dedup {
             .select(col("id"), col("cluster").as("__old"),
               least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
         }
-      val (updated, changed) = seam.cutCounted(stepped,
+      val (updated, moved) = seam.cutCounted(stepped,
         count(when(col("cluster") =!= col("__old"), lit(1))), s"round$i")
       labels = updated.select(col("id"), col("cluster"))
+      changed = moved
       converged = changed == 0
       // Round i-1's files fed only round i's (now materialized) write —
       // free them as the loop advances instead of leaking every round.
       if (i > 0) seam.drop(s"round${i - 1}")
       i += 1
     }
+    if (labels != null && !converged)
+      throw new NotConvergedException("connectedComponents", i, changed)
     if (labels == null)
       // maxIter == 0: degenerate, but honor the contract with the seed.
       labels = edges.select(col("src").as("id")).distinct()

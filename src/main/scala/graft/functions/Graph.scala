@@ -194,9 +194,11 @@ object Graph {
     *
     * Peels until the edge count stops changing (the true fixpoint), with
     * `maxRounds` as a SAFETY CAP only — a k=2 peel of an n-edge chain
-    * needs ~n/2 rounds, so a low fixed round count silently returns a
-    * partial peel on long re-crawl chains (the pre-r13 default of 8 did
-    * exactly that; GraphSpec's 40-edge-chain case pins the fix). Peeling
+    * needs ~n/2 rounds, so a low fixed round count would return a partial
+    * peel on long re-crawl chains (the pre-r13 default of 8 did exactly
+    * that; GraphSpec's 40-edge-chain case pins the fix). Hitting the cap
+    * while edges are still being peeled throws [[NotConvergedException]]
+    * rather than returning that partial peel. Peeling
     * is monotone, so a fixed-round SQL unroll of r ≥ fixpoint rounds
     * replays the result bit-for-bit (extra unrolled rounds are no-ops) —
     * which is what keeps the DuckDB oracle's finite unroll valid as long
@@ -222,6 +224,7 @@ object Graph {
       pairs.select(least(a, b).as("a"), greatest(a, b).as("b"))
         .filter(col("a") =!= col("b")).distinct(), count(lit(1)), "edges")
     var i = 0
+    var peeled = 0L
     var stable = prevCount == 0
     while (i < maxRounds && !stable) {
       val keep = edges.select(col("a").as("id")).unionAll(edges.select(col("b").as("id")))
@@ -235,9 +238,11 @@ object Graph {
       edges = nextEdges
       if (i > 0) seam.drop(s"round${i - 1}")
       stable = after == prevCount
+      peeled = prevCount - after
       prevCount = after
       i += 1
     }
+    if (!stable) throw new NotConvergedException("kCore", i, peeled)
     edges
   }
 }

@@ -95,6 +95,31 @@ class ChecksSpec extends AnyFunSuite {
     assert(results.forall(_.testResult == ValidationResult.PASSED))
   }
 
+  test("standardStageChecks runs as one grouped aggregate: job count pinned") {
+    SpecIo.withTempDir("checks-jobs") { dir =>
+      Seq((1L, "x"), (2L, "y"), (2L, "y")).toDF("k", "v").write.parquet(s"$dir/a")
+      Seq((2L, "y"), (1L, "x"), (3L, null)).toDF("k", "v").write.parquet(s"$dir/b")
+      val (a, b) = (spark.read.parquet(s"$dir/a"), spark.read.parquet(s"$dir/b"))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val results = Checks.standardStageChecks(spark, a, b, "src", "STAGING").collect()
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+        assert(results.map(_.testResult).toSeq ==
+          Seq(ValidationResult.PASSED, ValidationResult.FAILED,
+            ValidationResult.PASSED, ValidationResult.FAILED))
+      } finally spark.sparkContext.removeSparkListener(listener)
+      // Shuffle stage, global-fold stage, result; the four single checks
+      // run one by one submit 13 jobs on these frames.
+      assert(jobs.get == 3, s"jobs=${jobs.get}")
+    }
+  }
+
   test("dataMatchHashed: order-insensitive, bag semantics, detects diffs") {
     val a = Seq((1, "x"), (2, "y"), (2, "y")).toDF("k", "v")
     val b = Seq((2, "y"), (1, "x"), (2, "y")).toDF("k", "v")

@@ -215,6 +215,17 @@ class DedupSpec extends AnyFunSuite {
     assert(iters <= 4, s"shallow clusters should converge in <=4 rounds, ran $iters")
   }
 
+  test("connectedComponents throws when a chain longer than maxIter is still relabelling") {
+    // min-label propagation moves a label one hop per round: a 12-node
+    // chain needs 11 changing rounds, so a cap of 4 stops mid-propagation
+    val chain = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[graft.functions.NotConvergedException](
+      Dedup.connectedComponentsIterated(chain, maxIter = 4))
+    assert(e.operator == "connectedComponents" && e.rounds == 4 && e.changed > 0)
+    val (labels, iters) = Dedup.connectedComponentsIterated(chain, maxIter = 20)
+    assert(labels.filter(col("cluster") =!= 1L).isEmpty && iters <= 12)
+  }
+
   test("connectedComponents reliable-checkpoint path (cluster mode) gives identical labels") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L)).toDF("id_a", "id_b")

@@ -62,6 +62,15 @@ class GraphSpec extends AnyFunSuite {
     Graph.kCore(edges.toDF("a", "b"), col("a"), col("b"), k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  test("kCore throws when a chain longer than maxRounds is still peeling") {
+    // a k=2 peel drops the two chain ends per round: 40 edges need ~20
+    val chain = (1L to 40L).map(i => (i, i + 1))
+    val e = intercept[graft.functions.NotConvergedException](
+      Graph.kCore(chain.toDF("a", "b"), col("a"), col("b"), k = 2, maxRounds = 5))
+    assert(e.operator == "kCore" && e.rounds == 5 && e.changed == 2)
+    assert(core(chain, 2).isEmpty)
+  }
+
   test("kCore reliable-checkpoint path (cluster mode) matches local and writes files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-kcore-ckpt").toString
     val tailed = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L), (10L, 11L))

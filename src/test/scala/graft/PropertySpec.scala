@@ -1,7 +1,10 @@
 package graft
 
+import graft.dq.Checks
 import graft.functions.Dedup
+import graft.model.ValidationResult
 import graft.ops.{AsOf, Relational, Skew}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -26,6 +29,44 @@ class PropertySpec extends AnyFunSuite {
 
   private val rowsGen: Gen[List[(Long, String)]] =
     Gen.listOf(Gen.zip(Gen.chooseNum(0L, 8L), Gen.oneOf("a", "b", "c", "d")))
+
+  private val checkRowsGen: Gen[List[(Option[Int], Option[String], Option[Double])]] =
+    Gen.listOf(Gen.zip(
+      Gen.option(Gen.chooseNum(0, 3)),
+      Gen.option(Gen.oneOf("a", "b")),
+      Gen.option(Gen.oneOf(0.0, -0.0, Double.NaN, 1.5))))
+
+  test("standardStageChecks equals the four single checks run one by one") {
+    def cells(vs: Seq[ValidationResult]) =
+      vs.map(v => (v.testCase, v.stepName, v.testResult, v.comments))
+    def same(src: DataFrame, tgt: DataFrame, label: String): Unit =
+      assert(cells(Checks.standardStageChecks(spark, src, tgt, "s", "3NF").collect().toSeq) ==
+        cells(Seq(Checks.countMatch(src, tgt, "s", "3NF"), Checks.dataMatch(src, tgt, "s", "3NF"),
+          Checks.duplicateCheck(tgt, "s", "3NF"), Checks.nullCheck(tgt, "s", "3NF"))), label)
+    forAll(Gen.zip(checkRowsGen, checkRowsGen, Gen.chooseNum(0, 2)), n = 6) {
+      case (a, b, shift) =>
+        val src = a.toDF("k", "v", "d")
+        // target = part of the source (shared rows, duplicates and
+        // source-only rows) plus rows of its own
+        val tgt = (a.drop(shift) ++ b.take(3)).toDF("k", "v", "d")
+        same(src, tgt, "nulls, duplicates, one-sided rows, NaN and -0.0")
+        same(src, a.reverse.toDF("k", "v", "d"), "same rows, other order")
+        same(src, tgt.withColumn("k", col("k").cast("long")), "int source, long target")
+        same(src.withColumn("k", col("k").cast("long")), tgt, "long source, int target")
+        // coalesce with a literal makes the field non-nullable, so the
+        // null check narrows to it
+        val nonNull = tgt.withColumn("k", coalesce(col("k"), lit(0)))
+        assert(!nonNull.schema("k").nullable)
+        same(src, nonNull, "target with a non-nullable field")
+    }
+    // Widening a long target to double merges distinct longs beyond 2^53:
+    // the duplicate check must still see the longs.
+    val big = 9007199254740992L
+    val longs = Seq(Some(big), Some(big + 1), None).toDF("k")
+    same(Seq(Some(big.toDouble), None).toDF("k"), longs, "lossy widening")
+    same(Seq(Some(big.toDouble), None).toDF("k"), longs.union(longs.limit(1)),
+      "lossy widening with a real duplicate")
+  }
 
   test("symmetricDiff(a, a) is empty; diff directions partition the difference") {
     forAll(rowsGen) { rows =>
