@@ -34,34 +34,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionProfile.envCpus("32")
     // Shuffle parallelism sizes to the DATA, not the machine: at the
     // rehearsal SFs (sf1/sf10) a 32-partition sort holds 100× the rows per
     // partition it held at sf0.1 and heap-OOMs exactly the way a
     // mis-provisioned cluster would. SPARK_GRAFT_SHUFFLE_PARTITIONS raises
     // the INITIAL partition count for scale runs; AQE coalesces small
     // stages back down, so the floor-gated sf0.1 runs keep their default.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Iterative queries (q60) cut lineage with reliable checkpoints here
-      // instead of executor-local ones: the bench's blanket RDD unpersist
-      // otherwise warns about truncated local-checkpoint lineage, and this
-      // exercises the configuration a real cluster would run.
-      .config("spark.graft.checkpoint.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-ckpt-bench")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBoundedWindowWarnings()
+    // Iterative queries (q60) cut lineage with reliable checkpoints here
+    // instead of executor-local ones: the bench's blanket RDD unpersist
+    // otherwise warns about truncated local-checkpoint lineage, and this
+    // exercises the configuration a real cluster would run.
+    val spark = SessionProfile.session(cpus,
+      SessionProfile.envShufflePartitions(cpus),
+      checkpointDir = Some(s"${sys.props("java.io.tmpdir")}/graft-ckpt-bench"))
     // Warm the session once (Hadoop FS + codegen + JIT + parquet footers):
     // the first query otherwise pays ~5s of one-time init that has nothing
     // to do with the query being measured.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan for each (or one
   * named) catalog query — used to audit pushdown (PushedFilters/ReadSchema),
   * broadcast choices, and WholeStageCodegen coverage after every operator
@@ -11,13 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionProfile.session("4", "4")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_ == n) }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *
   * {{{
   * // at session build time:
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  * SessionProfile.session(cores, shufflePartitions, extensions = true)
   * // or on an existing session:
   * GraftFunctions.register(spark)
   * spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")

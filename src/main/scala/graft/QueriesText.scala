@@ -957,7 +957,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // FLAT-to-worse: AQE materializes the unrolled chain's ~3 micro-
     // exchanges per round sequentially, costing what the 4 saved seam
     // round-trips cost. Falsified, reverted; the win that survived is
-    // inside pageRankInt: the loop-invariant (host, base) seam.)
+    // inside pageRankInt: its loop invariants are seamed once.)
     graft.functions.Graph.pageRankInt(edges, col("src"), col("dst"),
         col("w"), iterations = 8,
         checkpointDir = spark.conf.getOption("spark.graft.checkpoint.dir"))

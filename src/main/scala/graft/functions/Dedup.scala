@@ -299,8 +299,8 @@ object Dedup {
     var changed = 0L
     while (i < maxIter && !converged) {
       // Carry the OLD label through so the convergence count is computable
-      // on the materializing frame itself: `matCounted`'s observe
-      // evaluates during the write job — no separate probe job per round.
+      // on the materializing frame itself: `cutCounted`'s observe
+      // evaluates during the checkpoint job — no separate probe job per round.
       val stepped =
         if (i == 0)
           edges.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
@@ -317,13 +317,10 @@ object Dedup {
               least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
         }
       val (updated, moved) = seam.cutCounted(stepped,
-        count(when(col("cluster") =!= col("__old"), lit(1))), s"round$i")
+        count(when(col("cluster") =!= col("__old"), lit(1))))
       labels = updated.select(col("id"), col("cluster"))
       changed = moved
       converged = changed == 0
-      // Round i-1's files fed only round i's (now materialized) write —
-      // free them as the loop advances instead of leaking every round.
-      if (i > 0) seam.drop(s"round${i - 1}")
       i += 1
     }
     if (labels != null && !converged)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Link-graph authority scoring — the crawl-side ranking a web-scale
@@ -28,8 +29,14 @@ import org.apache.spark.sql.functions._
   * the destination, both shuffling only (host, long) pairs. The edge list
   * arrives pre-aggregated to (src, dst, weight): document-level fan-in
   * was collapsed by the caller's groupBy, so iteration cost is O(|edges|)
-  * narrow rows, never O(|corpus|). Iteration count is fixed (default 8 —
-  * power iteration converges geometrically at damping 0.85). Each round's
+  * narrow rows, never O(|corpus|). The loop invariants are computed once,
+  * before the first round: each seamed edge row carries its source's
+  * out-weight `out_u`, and `n_hosts` is the observed row count of the
+  * seamed host list, so `base` enters every round as a literal. A round's
+  * one group-by also reads a zero contribution per host, which keeps
+  * hosts without inflow in the state at `(100 - dampingPct) * base DIV
+  * 100` without a join. Iteration count is fixed (default 8 — power
+  * iteration converges geometrically at damping 0.85). Each round's
   * state is lineage-CUT (localCheckpoint, or a reliable `checkpoint()`
   * when `checkpointDir` is set — the cluster-mode configuration), the
   * same discipline and seam as [[Dedup.connectedComponentsIterated]]:
@@ -53,7 +60,7 @@ object Graph {
     // callers. Expensive-lineage boundaries (q156's scored base, q196's
     // shingle sets) go through Relational.materialize's parquet
     // round-trip instead.
-    graft.ops.Materialize.seam(df.sparkSession, checkpointDir).cut(df, "m")
+    graft.ops.Materialize.seam(df.sparkSession, checkpointDir).cut(df)
 
   /** Weighted integer PageRank. `edges` must be pre-aggregated
     * (src, dst, weight) with src ≠ dst; returns (host, rank) for every
@@ -66,12 +73,8 @@ object Graph {
                   checkpointDir: Option[String] = None,
                   cutEvery: Int = 2): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100 && cutEvery >= 1)
-    // r20: parquet-round-trip seams ([[graft.ops.Materialize]]) — the
-    // reliable checkpoint computed every cut frame twice; the round-trip
-    // computes once and retires superseded rank frames as it goes.
     val seam = graft.ops.Materialize.seam(edges.sparkSession, checkpointDir)
     var step = 0
-    var lastStep = -1
     // Segment-aware materializer: with the default cadence a cut covers
     // ≤2 rounds of cheap lineage — the eager checkpoint's double-compute
     // costs ~nothing (the measured [[graft.ops.Materialize]] domain). A
@@ -80,42 +83,33 @@ object Graph {
     // round-trip computes it once where the checkpoint would run the
     // whole unrolled chain twice.
     val cut: DataFrame => DataFrame = { df =>
-      val out = if (cutEvery > 2) seam.mat(df, s"r$step")
-                else seam.cut(df, s"r$step")
-      if (lastStep >= 0) seam.drop(s"r$lastStep")
-      lastStep = step
-      step += 1
-      out
+      if (cutEvery <= 2) seam.cut(df)
+      else {
+        val out = seam.mat(df, s"r$step")
+        if (step > 0) seam.drop(s"r${step - 1}")
+        step += 1
+        out
+      }
     }
-    // Materialize the (usually derived) edge list once: every round
-    // references it, and cutting here also caps the per-round plan at a
-    // constant two joins + one aggregate.
+    // Materialize the (usually derived) edge list once, each row carrying
+    // its source's out-weight: every round references it, and cutting
+    // here caps the per-round plan at one join + one aggregate.
     val e = seam.cut(edges.select(src.as("src"), dst.as("dst"),
-      weight.cast("long").as("w")), "edges")
-    val hosts = e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct()
-    // base rank as a one-row broadcast so n_hosts stays in-plan (no
-    // driver-side count action). The (host, base) frame is loop-invariant
-    // — one row per host — and every round's update joins against it, so
-    // it seams ONCE (r21): the old lazy frame re-ran the full edge-list
-    // distinct (a corpus-scale shuffle of the seamed edges) inside every
-    // round's plan. outw stays lazy — it is a partial-aggregated (hence
-    // hub-safe) broadcast-sized rollup of the seamed edges, cheap to
-    // recompute per round.
-    val base = hosts.agg((lit(scale) / count(lit(1))).cast("long").as("base"))
-    val outw = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val withBase = seam.cut(hosts.crossJoin(broadcast(base)), "hosts")
-    var r = withBase.withColumn("rank", col("base"))
+        weight.cast("long").as("w"))
+      .withColumn("ow", sum(col("w")).over(Window.partitionBy(col("src")))))
+    val (hosts, nHosts) = seam.cutCounted(e.select(col("src").as("host"))
+      .union(e.select(col("dst").as("host"))).distinct(), count(lit(1)))
+    // Same truncating double division as `CAST(scale / n_hosts AS BIGINT)`.
+    val base = if (nHosts == 0) 0L else (scale.toDouble / nHosts).toLong
+    val noInflow = hosts.select(col("host"), lit(0L).as("contrib"))
+    var r = hosts.select(col("host"), lit(base).as("rank"))
     for (i <- 1 to iterations) {
-      val inflow = r.join(e, r("host") === e("src"))
-        .join(outw, "src")
-        .select(col("dst").as("host"),
-          expr("(rank * w) DIV ow").as("contrib"))
+      r = r.join(e, r("host") === e("src"))
+        .select(col("dst").as("host"), expr("(rank * w) DIV ow").as("contrib"))
+        .union(noInflow)
         .groupBy(col("host")).agg(sum(col("contrib")).as("inflow"))
-      r = withBase.join(inflow, Seq("host"), "left")
-        .withColumn("rank",
-          expr(s"((100 - $dampingPct) * base + $dampingPct * coalesce(inflow, 0L)) DIV 100"))
-        .select(col("host"), col("base"), col("rank"))
+        .select(col("host"),
+          expr(s"((100 - $dampingPct) * ${base}L + $dampingPct * inflow) DIV 100").as("rank"))
       // Cut every `cutEvery` rounds (default 2): a shallow uncut chain
       // costs Catalyst nothing, and fewer cuts mean less checkpoint I/O —
       // the dominant per-round cost. Callers iterating a TINY graph
@@ -124,7 +118,7 @@ object Graph {
       // one final materialization is strictly cheaper.
       if (i % cutEvery == 0 || i == iterations) r = cut(r)
     }
-    r.select(col("host"), col("rank"))
+    r
   }
 
   /** Exact triangle count + global clustering coefficient over an
@@ -211,18 +205,15 @@ object Graph {
             maxRounds: Int = 64,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && maxRounds >= 1)
-    // r20: materialization via [[graft.ops.Materialize.Seam]] — parquet
-    // round-trips compute each round ONCE (the reliable checkpoint ran
-    // every lineage twice), and the per-round edge count rides the write
-    // job via observe instead of being its own action. Retired rounds'
-    // files are freed as the peel advances.
+    // Every round is a checkpoint cut ([[graft.ops.Materialize.Seam]]) whose
+    // edge count rides the checkpoint job via observe instead of being its
+    // own action. Callers pass a PRE-MATERIALIZED pair list (q186
+    // materializes the LSH pipeline once for both peels), so the
+    // canonicalized-edge init is cheap lineage too.
     val seam = graft.ops.Materialize.seam(pairs.sparkSession, checkpointDir)
-    // Callers pass a PRE-MATERIALIZED pair list (q186 materializes the LSH
-    // pipeline once for both peels), so the canonicalized-edge init is
-    // cheap lineage — checkpoint-cut it (no observe wait).
     var (edges, prevCount) = seam.cutCounted(
       pairs.select(least(a, b).as("a"), greatest(a, b).as("b"))
-        .filter(col("a") =!= col("b")).distinct(), count(lit(1)), "edges")
+        .filter(col("a") =!= col("b")).distinct(), count(lit(1)))
     var i = 0
     var peeled = 0L
     var stable = prevCount == 0
@@ -234,9 +225,8 @@ object Graph {
       val (nextEdges, after) = seam.cutCounted(edges
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")), count(lit(1)), s"round$i")
+        .select(col("a"), col("b")), count(lit(1)))
       edges = nextEdges
-      if (i > 0) seam.drop(s"round${i - 1}")
       stable = after == prevCount
       peeled = prevCount - after
       prevCount = after

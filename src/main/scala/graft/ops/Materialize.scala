@@ -14,9 +14,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    materializes the lineage, then ReliableRDDCheckpointData re-runs it
   *    to write the files), so for an EXPENSIVE derived pipeline (LM
   *    scoring, tokenize+minhash, shingling) the round-trip — one compute,
-  *    ~0.2 s flat write-job overhead (SeamProbe) — wins at every scale.
-  *    Because the write is a SQL action, `observe()` rides the same job
-  *    for free counts.
+  *    ~0.2 s flat write-job overhead (OPTIMIZATION_r20.md) — wins at every
+  *    scale.
   *  - [[Seam.cut]] — eager checkpoint. A LOOP ROUND's lineage is cheap by
   *    construction (it reads the previous round's materialized frame), so
   *    the double-compute costs ~nothing while parquet's flat write
@@ -25,10 +24,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    PageRank family (e.g. q60 1.40 s vs 1.71 s, q199 2.8–3.5 s vs
   *    3.9–4.1 s).
   *
-  * `spark.graft.seam.impl=parquet|checkpoint` force-overrides both
-  * directions — the bisection/scale-rehearsal knob (a 100 TB round whose
-  * re-compute is no longer cheap can flip cuts to parquet without a code
-  * change).
+  * [[Seam.cutCounted]] puts an `observe()` on the frame it checkpoints, so
+  * a loop's convergence metric rides the checkpoint job instead of costing
+  * a probe job of its own.
   *
   * File lifetime (parquet side): targets live under a per-call UUID dir
   * registered with the filesystem's delete-on-exit hook; loop callers
@@ -44,9 +42,6 @@ object Materialize {
     private val hPath = new org.apache.hadoop.fs.Path(runDir)
     private val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.deleteOnExit(hPath)
-    private val impl = spark.conf.getOption("spark.graft.seam.impl")
-    private def forceCheckpoint = impl.contains("checkpoint")
-    private def forceParquet = impl.contains("parquet")
 
     private def ckpt(df: DataFrame): DataFrame = {
       checkpointDir.foreach { dir =>
@@ -66,41 +61,24 @@ object Materialize {
     /** Materialize an EXPENSIVE-lineage frame once (parquet round-trip;
       * see class doc for the measured rationale).
       */
-    def mat(df: DataFrame, step: String): DataFrame =
-      if (forceCheckpoint) ckpt(df) else pq(df, step)
-
-    /** [[mat]] plus one aggregate metric riding the write job via
-      * `observe`. `metric` must be an aggregate over the frame.
-      */
-    def matCounted(df: DataFrame, metric: Column, step: String): (DataFrame, Long) =
-      if (forceCheckpoint) {
-        val cut = ckpt(df)
-        (cut, cut.agg(metric.as("m")).head().getLong(0))
-      } else {
-        val obs = org.apache.spark.sql.Observation()
-        val p = s"$runDir/$step"
-        df.observe(obs, metric.as("m")).write.mode("overwrite").parquet(p)
-        (spark.read.parquet(p), obs.get("m").asInstanceOf[Long])
-      }
+    def mat(df: DataFrame, step: String): DataFrame = pq(df, step)
 
     /** Cut a LOOP-ROUND frame (cheap lineage — eager checkpoint; see
       * class doc).
       */
-    def cut(df: DataFrame, step: String): DataFrame =
-      if (forceParquet) pq(df, step) else ckpt(df)
+    def cut(df: DataFrame): DataFrame = ckpt(df)
 
-    /** [[cut]] plus an aggregate metric (one probe job on the cut frame
-      * in checkpoint mode; free via observe in parquet mode).
+    /** [[cut]] plus one aggregate metric riding the checkpoint job via
+      * `observe`. `metric` must be a LONG aggregate over the frame.
       */
-    def cutCounted(df: DataFrame, metric: Column, step: String): (DataFrame, Long) =
-      if (forceParquet) matCounted(df, metric, step)
-      else {
-        val c = ckpt(df)
-        (c, c.agg(metric.as("m")).head().getLong(0))
-      }
+    def cutCounted(df: DataFrame, metric: Column): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val out = ckpt(df.observe(obs, metric.as("m")))
+      (out, obs.get("m").asInstanceOf[Long])
+    }
 
     /** Free a parquet step whose files no longer feed anything live
-      * (no-op for checkpoint-mode steps — the ContextCleaner owns those).
+      * (checkpoint files belong to the ContextCleaner).
       */
     def drop(step: String): Unit =
       fs.delete(new org.apache.hadoop.fs.Path(s"$runDir/$step"), true)

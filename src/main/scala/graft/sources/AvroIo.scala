@@ -269,15 +269,18 @@ object AvroIo {
     }
   }
 
+  /** Every `.avro` file under `root`, depth first. Walks with
+    * `listStatus`: `listFiles` returns `LocatedFileStatus`es, which copy
+    * each entry's permissions, and on a local filesystem without the
+    * native Hadoop library that forks an `ls -ld` per file and directory.
+    */
   private def listAvroFiles(fs: FileSystem, root: Path): Seq[FileStatus] = {
-    if (!fs.exists(root)) return Nil
-    val it = fs.listFiles(root, true)
-    val out = mutable.Buffer.empty[FileStatus]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".avro")) out += st
+    def walk(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.endsWith(".avro")) Seq(st)
+      else Nil
     }
-    out.toSeq
+    if (fs.exists(root)) walk(root) else Nil
   }
 
   /** Read an avro dir written by [[writeAvro]] (or any hive-partitioned

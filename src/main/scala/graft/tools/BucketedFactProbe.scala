@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Memory-floor probe for the DECLARED bucketed fact layout
   * ([[graft.sources.Bucketing]]) — the answer to q174's raw-parquet memory
   * floor: the 600M⋈150M orderkey sort-merge at sf100 needs ≥1 GB/core on
@@ -52,16 +50,8 @@ object BucketedFactProbe {
         "adopt <srcDir> <buckets> | probe <srcDir> <outJson> [repeats]")
     val mode = args(0)
     val srcDir = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "1024"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionProfile.session(graft.SessionProfile.envCpus("32"),
+      graft.SessionProfile.envShufflePartitions("1024"))
 
     mode match {
       case "layout" =>

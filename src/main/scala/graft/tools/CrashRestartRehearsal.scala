@@ -5,7 +5,6 @@ import java.io.File
 import graft.dq.Checks
 import graft.model.ValidationResult
 import graft.streaming.ArrivalJob
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -64,10 +63,12 @@ object CrashRestartRehearsal {
       val outJson = args.lift(1).getOrElse("BENCH_STREAM_CRASH_SF1.json")
       val source = args.lift(2).getOrElse("file")
       val root = java.nio.file.Files.createTempDirectory("graft_crash").toString
-      val report = run(root, sfDir, source)
-      java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-        (report + "\n").getBytes("UTF-8"))
-      println(report)
+      try {
+        val report = run(root, sfDir, source)
+        java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
+          (report + "\n").getBytes("UTF-8"))
+        println(report)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
   }
 
   /** The full three-child protocol; returns the artifact JSON. Shared with
@@ -110,8 +111,10 @@ object CrashRestartRehearsal {
     require(!new File(s"$root/conform").exists(),
       "seam kill must land before conform ran")
     val (exitNone, wNone) = wall(runChild(root, sfDir, "none", source))
-    require(exitNone == 0, s"final child must complete, exited $exitNone " +
-      s"(see $root/child_none.log)")
+    require(exitNone == 0, s"final child must complete, exited $exitNone; " +
+      "its log ends:\n" + new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$root/child_none.log")), "UTF-8")
+        .linesIterator.toSeq.takeRight(20).mkString("\n"))
     val childJson = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/child_result.json")), "UTF-8").trim
     val sourceName = if (source == "stub") "graft-kafka-stub" else "file"
@@ -192,15 +195,8 @@ object CrashRestartRehearsal {
 
   private def child(root: String, sfDir: String, killMode: String,
                     source: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionProfile.session(graft.SessionProfile.envCpus("32"),
+      graft.SessionProfile.envShufflePartitions("32"))
     val (stage, data, ledger, ckpt, conform) =
       (s"$root/stage_in", s"$root/arrival", s"$root/ledger", s"$root/ckpt",
         s"$root/conform")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -49,21 +48,10 @@ object PlanMetrics {
     val only = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.checkpoint.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-ckpt-bench")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietBoundedWindowWarnings()
+    val cpus = graft.SessionProfile.envCpus("32")
+    val spark = graft.SessionProfile.session(cpus,
+      graft.SessionProfile.envShufflePartitions(cpus),
+      checkpointDir = Some(s"${sys.props("java.io.tmpdir")}/graft-ckpt-bench"))
     // The noop write runs its OWN QueryExecution (df.queryExecution is the
     // un-executed logical frame) — grab the executed one via listener.
     @volatile var lastExecuted: Option[SparkPlan] = None

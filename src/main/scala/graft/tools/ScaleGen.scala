@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf-scale-up generator: replicate an existing testdata directory K×
@@ -80,14 +80,7 @@ object ScaleGen {
       case None => _ => true
     }
     require(k >= 1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionProfile.session(graft.SessionProfile.envCpus("32"), "32")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {

@@ -44,18 +44,16 @@ object Scd2Rehearsal {
     val sfDir = args.lift(0).getOrElse("/tmp/graft_sf10")
     val outJson = args.lift(1).getOrElse("BENCH_SCD2_SF10.json")
     val runs = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = graft.SessionProfile.session(graft.SessionProfile.envCpus("32"),
+      graft.SessionProfile.envShufflePartitions("64"))
     val scratch = java.nio.file.Files.createTempDirectory("graft_scd2").toString
+    try rehearse(spark, sfDir, outJson, runs, scratch)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
+    spark.stop()
+  }
+
+  private def rehearse(spark: SparkSession, sfDir: String, outJson: String,
+                       runs: Int, scratch: String): Unit = {
     def gen(i: Int) = s"$scratch/dim_gen${i % 2}"
     def day(r: Int) = to_timestamp(lit(f"2020-01-${r + 1}%02d 00:00:00"))
 
@@ -134,6 +132,5 @@ object Scd2Rehearsal {
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       (json + "\n").getBytes("UTF-8"))
     println(json)
-    spark.stop()
   }
 }

@@ -76,18 +76,19 @@ object StreamingRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val outJson = args.lift(1).getOrElse("BENCH_STREAM_SF1.json")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
+    val spark = graft.SessionProfile.session(graft.SessionProfile.envCpus("32"),
+      graft.SessionProfile.envShufflePartitions("32"))
+    // The work dir holds every layer's copy of the events; only the
+    // artifact outlives the run.
     val root = java.nio.file.Files.createTempDirectory("graft_ep1_sf1").toString
+    try rehearse(spark, sfDir, outJson, root)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    spark.stop()
+  }
+
+  private def rehearse(spark: SparkSession, sfDir: String, outJson: String,
+                       root: String): Unit = {
+    import spark.implicits._
     val (stage, data, ledger, ckpt, conform, audit) =
       (s"$root/stage_in", s"$root/arrival", s"$root/ledger", s"$root/ckpt",
         s"$root/conform", s"$root/audit")
@@ -219,6 +220,5 @@ object StreamingRehearsal {
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       (json + "\n").getBytes("UTF-8"))
     println(json)
-    spark.stop()
   }
 }

@@ -17,12 +17,7 @@ class IncrementalReadSpec extends AnyFunSuite {
     TestSpark.spark // ensure the shared context exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = SessionProfile.session("4", "4", extensions = true)
     SparkSession.setDefaultSession(TestSpark.spark)
     SparkSession.setActiveSession(TestSpark.spark)
     s

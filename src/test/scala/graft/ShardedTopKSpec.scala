@@ -16,14 +16,9 @@ class ShardedTopKSpec extends AnyFunSuite {
     TestSpark.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.topk.lowCardCols", "lang,event_type")
-      .config("spark.graft.topk.shards", "8")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = SessionProfile.session("4", "4", extensions = true)
+    s.conf.set("spark.graft.topk.lowCardCols", "lang,event_type")
+    s.conf.set("spark.graft.topk.shards", "8")
     SparkSession.setDefaultSession(TestSpark.spark)
     SparkSession.setActiveSession(TestSpark.spark)
     s

@@ -6,19 +6,7 @@ import org.apache.spark.sql.SparkSession
   * ~5s JVM/context startup each).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Logs.quietBoundedWindowWarnings()
-    s
-  }
+  lazy val spark: SparkSession = SessionProfile.session("4", "4")
 }
 
 /** Kafka-shaped test record (top-level: inner case classes break encoder

@@ -25,16 +25,8 @@ class TopKPlanSpec extends AnyFunSuite {
     val plain = TestSpark.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-topk-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = SessionProfile.session("4", "4", extensions = true)
+    s.conf.set("spark.sql.adaptive.enabled", "false")
     SparkSession.setDefaultSession(plain)
     SparkSession.setActiveSession(plain)
     s
