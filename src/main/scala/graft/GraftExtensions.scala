@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * tables — `TESTING_QUERIES` CLOBs) can call them from SQL text:
   *
   * {{{
-  * // at session build time:
-  * SessionProfile.session(cores, shufflePartitions, extensions = true)
+  * // at session build time (before the SparkContext starts):
+  * --conf spark.sql.extensions=graft.GraftExtensions
   * // or on an existing session:
   * GraftFunctions.register(spark)
   * spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")

@@ -952,9 +952,9 @@ private[graft] trait QueriesText { this: Queries.type =>
         expr("(doc_id DIV 10) % 10").as("dst"))
       .filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    // (r21: a cutEvery=8 full unroll was tried — the host universe is ≤10
-    // by construction, so the per-round frames are tiny — and measured
-    // FLAT-to-worse: AQE materializes the unrolled chain's ~3 micro-
+    // (r21: one cut after a full 8-round unroll was tried — the host
+    // universe is ≤10 by construction, so the per-round frames are tiny —
+    // and measured FLAT-to-worse: AQE materializes the unrolled chain's ~3 micro-
     // exchanges per round sequentially, costing what the 4 saved seam
     // round-trips cost. Falsified, reverted; the win that survived is
     // inside pageRankInt: its loop invariants are seamed once.)

@@ -47,18 +47,13 @@ object SessionProfile {
         "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))
 
   /** Build (or join) the session for [[conf]], at log level WARN with the
-    * bounded-window warning silenced ([[Logs]]). `extensions` adds
-    * [[GraftExtensions]] (the custom SQL functions and the incremental-read
-    * rule).
+    * bounded-window warning silenced ([[Logs]]).
     */
   def session(cores: String, shufflePartitions: String,
-              checkpointDir: Option[String] = None,
-              extensions: Boolean = false): SparkSession = {
-    val builder = conf(cores, shufflePartitions, checkpointDir)
+              checkpointDir: Option[String] = None): SparkSession = {
+    val spark = conf(cores, shufflePartitions, checkpointDir)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
-    val spark =
-      (if (extensions) builder.withExtensions(new GraftExtensions) else builder)
-        .getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Logs.quietBoundedWindowWarnings()
     spark

@@ -249,27 +249,14 @@ object Dedup {
     */
   def connectedComponentsIterated(pairs: DataFrame, maxIter: Int = 10,
                                   checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    // r20 materialization strategy: PARQUET WRITE + READ-BACK instead of
-    // RDD checkpoint. Two measured costs of `checkpoint(eager = true)`
-    // motivated the switch:
-    //  1. a reliable checkpoint computes every round TWICE — the eager
-    //     count materializes the lineage, then ReliableRDDCheckpointData
-    //     re-runs the same lineage in a second job to write the files;
-    //  2. the convergence probe was its own driver round-trip per round on
-    //     top of that (and as `limit(1)` it scanned the converged round in
-    //     up to 4 scale-up waves).
-    // A parquet round-trip computes once, is exactly as
-    // restart-/executor-loss-safe as a reliable checkpoint when
-    // `checkpointDir` points at shared storage (the cluster conf), and —
-    // because the write is a SQL action — an `observe()` on the frame
-    // rides the SAME job and returns the changed-label count for free.
-    // Per round: 3 jobs → 1. Files live under a per-run UUID dir; rounds
-    // are deleted as they stop being referenced and the dir is registered
-    // for delete-on-exit (the final labels table must outlive this call —
-    // the returned frame lazily reads it, matching the old checkpoint's
-    // GC-scoped lifetime).
+    // Materialization: the loop-invariant edge list goes through
+    // `seam.mat` (one parquet write + read-back under a delete-on-exit
+    // UUID dir); each round is a `seam.cutCounted` checkpoint cut whose
+    // `observe()` returns the changed-label count from the cut's own job —
+    // one job per round, no separate convergence probe. Round checkpoints
+    // belong to the ContextCleaner, so the returned labels frame stays
+    // readable for as long as the caller holds it.
     val seam = graft.ops.Materialize.seam(pairs.sparkSession, checkpointDir)
-    def mat(df: DataFrame, step: String): DataFrame = seam.mat(df, step)
     // Materialize the edge list once: `pairs` is typically the output of the
     // whole LSH candidate pipeline, and every iteration references edges
     // twice — without this cut the shingle→minhash→band derivation would
@@ -283,7 +270,7 @@ object Dedup {
     // costs CPU but no wall. (r20 A/B: a single-pass explode-of-2-structs
     // variant serialized the derivation into one pipeline and measured
     // 2.4→3.1 s SLOWER — falsified and reverted.)
-    val edges = mat(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+    val edges = seam.mat(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))), "edges")
     // Round 1 is SPECIALIZED: under the identity seed (label(id) = id) the
     // generic step `least(label, min over neighbors of label(dst))`

@@ -70,27 +70,9 @@ object Graph {
                   weight: Column, iterations: Int = 8,
                   dampingPct: Int = 85,
                   scale: Long = 1000000000L,
-                  checkpointDir: Option[String] = None,
-                  cutEvery: Int = 2): DataFrame = {
-    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100 && cutEvery >= 1)
+                  checkpointDir: Option[String] = None): DataFrame = {
+    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val seam = graft.ops.Materialize.seam(edges.sparkSession, checkpointDir)
-    var step = 0
-    // Segment-aware materializer: with the default cadence a cut covers
-    // ≤2 rounds of cheap lineage — the eager checkpoint's double-compute
-    // costs ~nothing (the measured [[graft.ops.Materialize]] domain). A
-    // caller-raised cadence makes each segment MULTI-round lineage, which
-    // is exactly the seam doctrine's expensive case: the parquet
-    // round-trip computes it once where the checkpoint would run the
-    // whole unrolled chain twice.
-    val cut: DataFrame => DataFrame = { df =>
-      if (cutEvery <= 2) seam.cut(df)
-      else {
-        val out = seam.mat(df, s"r$step")
-        if (step > 0) seam.drop(s"r${step - 1}")
-        step += 1
-        out
-      }
-    }
     // Materialize the (usually derived) edge list once, each row carrying
     // its source's out-weight: every round references it, and cutting
     // here caps the per-round plan at one join + one aggregate.
@@ -110,13 +92,10 @@ object Graph {
         .groupBy(col("host")).agg(sum(col("contrib")).as("inflow"))
         .select(col("host"),
           expr(s"((100 - $dampingPct) * ${base}L + $dampingPct * inflow) DIV 100").as("rank"))
-      // Cut every `cutEvery` rounds (default 2): a shallow uncut chain
+      // Cut every 2 rounds and after the last: a two-round uncut chain
       // costs Catalyst nothing, and fewer cuts mean less checkpoint I/O —
-      // the dominant per-round cost. Callers iterating a TINY graph
-      // (q181's alphabet-sized journey chain) raise this to the iteration
-      // count: each local job's fixed overhead dwarfs the micro-plan, so
-      // one final materialization is strictly cheaper.
-      if (i % cutEvery == 0 || i == iterations) r = cut(r)
+      // the dominant per-round cost.
+      if (i % 2 == 0 || i == iterations) r = seam.cut(r)
     }
     r
   }

@@ -2,36 +2,31 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Stage-boundary materialization primitives (r20).
+/** Stage-boundary materialization primitives.
   *
   * The engine's iterative operators (connected components, k-core,
   * PageRank) and multi-consumer stage boundaries all need "compute this
-  * frame ONCE, truncate lineage, let N consumers read it". Two mechanisms,
-  * with MEASURED domains (r20 interleaved A/Bs):
+  * frame ONCE, truncate lineage, let N consumers read it":
   *
-  *  - [[Seam.mat]] — parquet write + read-back. `checkpoint(eager=true)`
-  *    against a reliable dir computes its frame TWICE (the eager count
-  *    materializes the lineage, then ReliableRDDCheckpointData re-runs it
-  *    to write the files), so for an EXPENSIVE derived pipeline (LM
-  *    scoring, tokenize+minhash, shingling) the round-trip — one compute,
-  *    ~0.2 s flat write-job overhead (OPTIMIZATION_r20.md) — wins at every
-  *    scale.
-  *  - [[Seam.cut]] — eager checkpoint. A LOOP ROUND's lineage is cheap by
-  *    construction (it reads the previous round's materialized frame), so
-  *    the double-compute costs ~nothing while parquet's flat write
-  *    overhead would be paid every round: at sf0.1 the checkpoint leg of
-  *    the interleaved A/B beat the parquet leg across the whole CC/kCore/
-  *    PageRank family (e.g. q60 1.40 s vs 1.71 s, q199 2.8–3.5 s vs
-  *    3.9–4.1 s).
+  *  - [[Seam.mat]] — parquet write + read-back, for EXPENSIVE derived
+  *    pipelines (LM scoring, tokenize+minhash, shingling) and CC's
+  *    loop-invariant edge list. Files live under a per-call UUID dir
+  *    registered with the filesystem's delete-on-exit hook.
+  *  - [[Seam.cut]] — eager checkpoint (reliable under `checkpointDir`,
+  *    local otherwise), for LOOP ROUNDS, whose lineage is cheap by
+  *    construction (it reads the previous round's cut frame). Checkpoint
+  *    files belong to the ContextCleaner.
+  *  - [[Seam.cutCounted]] — [[Seam.cut]] with an `observe()` on the frame,
+  *    so a loop's convergence metric rides the checkpoint job: one job per
+  *    round under either checkpoint kind (MaterializeSpec).
   *
-  * [[Seam.cutCounted]] puts an `observe()` on the frame it checkpoints, so
-  * a loop's convergence metric rides the checkpoint job instead of costing
-  * a probe job of its own.
-  *
-  * File lifetime (parquet side): targets live under a per-call UUID dir
-  * registered with the filesystem's delete-on-exit hook; loop callers
-  * additionally [[Seam.drop]] rounds as they stop being referenced. This
-  * matches the old checkpoint files' GC-scoped lifetime.
+  * Why two mechanisms: the r20 interleaved A/Bs (OPTIMIZATION_r20.md) put
+  * parquet ahead for expensive lineage and the checkpoint ahead for loop
+  * rounds (sf0.1: q60 1.40 s vs 1.71 s, q199 2.8–3.5 s vs 3.9–4.1 s), on
+  * the reading that a reliable eager checkpoint computed its frame twice.
+  * MaterializeSpec now counts a reliable eager checkpoint of an observed
+  * frame as one job, so the parquet side of that split is not measured
+  * on the current code and may no longer pay.
   */
 object Materialize {
 
@@ -43,7 +38,19 @@ object Materialize {
     private val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.deleteOnExit(hPath)
 
-    private def ckpt(df: DataFrame): DataFrame = {
+    /** Materialize an EXPENSIVE-lineage frame once (parquet round-trip;
+      * see class doc).
+      */
+    def mat(df: DataFrame, step: String): DataFrame = {
+      val p = s"$runDir/$step"
+      df.write.mode("overwrite").parquet(p)
+      spark.read.parquet(p)
+    }
+
+    /** Cut a LOOP-ROUND frame (cheap lineage — eager checkpoint; see
+      * class doc).
+      */
+    def cut(df: DataFrame): DataFrame = {
       checkpointDir.foreach { dir =>
         val sc = spark.sparkContext
         if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
@@ -52,36 +59,14 @@ object Materialize {
       else df.localCheckpoint(eager = true)
     }
 
-    private def pq(df: DataFrame, step: String): DataFrame = {
-      val p = s"$runDir/$step"
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-
-    /** Materialize an EXPENSIVE-lineage frame once (parquet round-trip;
-      * see class doc for the measured rationale).
-      */
-    def mat(df: DataFrame, step: String): DataFrame = pq(df, step)
-
-    /** Cut a LOOP-ROUND frame (cheap lineage — eager checkpoint; see
-      * class doc).
-      */
-    def cut(df: DataFrame): DataFrame = ckpt(df)
-
     /** [[cut]] plus one aggregate metric riding the checkpoint job via
       * `observe`. `metric` must be a LONG aggregate over the frame.
       */
     def cutCounted(df: DataFrame, metric: Column): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
-      val out = ckpt(df.observe(obs, metric.as("m")))
+      val out = cut(df.observe(obs, metric.as("m")))
       (out, obs.get("m").asInstanceOf[Long])
     }
-
-    /** Free a parquet step whose files no longer feed anything live
-      * (checkpoint files belong to the ContextCleaner).
-      */
-    def drop(step: String): Unit =
-      fs.delete(new org.apache.hadoop.fs.Path(s"$runDir/$step"), true)
   }
 
   def seam(spark: SparkSession, checkpointDir: Option[String]): Seam =

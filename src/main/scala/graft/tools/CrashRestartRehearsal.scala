@@ -63,12 +63,13 @@ object CrashRestartRehearsal {
       val outJson = args.lift(1).getOrElse("BENCH_STREAM_CRASH_SF1.json")
       val source = args.lift(2).getOrElse("file")
       val root = java.nio.file.Files.createTempDirectory("graft_crash").toString
-      try {
-        val report = run(root, sfDir, source)
-        java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
-          (report + "\n").getBytes("UTF-8"))
-        println(report)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+      val report = run(root, sfDir, source)
+      java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
+        (report + "\n").getBytes("UTF-8"))
+      println(report)
+      // Only a passing run's work dir goes: a failed one keeps the child
+      // logs its failure message points at.
+      org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
   }
 
   /** The full three-child protocol; returns the artifact JSON. Shared with
@@ -86,7 +87,8 @@ object CrashRestartRehearsal {
     def d1(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     val (exitTear, wTear) = wall(runChild(root, sfDir, s"tear:$KillBatch", source))
-    require(exitTear == 137, s"tear child must die by OUR halt(137), exited $exitTear")
+    require(exitTear == 137, s"tear child must die by OUR halt(137), exited $exitTear " +
+      s"(see $root/child_tear.log)")
     // Torn-state evidence, read straight off the filesystem: the ledger has
     // runs 0..K-1 only, while the data layer already carries job_run_id=K
     // partition dirs from the half-written batch.
@@ -97,7 +99,8 @@ object CrashRestartRehearsal {
     require(dataRunsAfterTear.contains(KillBatch),
       s"data layer must hold the torn batch $KillBatch: $dataRunsAfterTear")
     val (exitSeam, wSeam) = wall(runChild(root, sfDir, "seam", source))
-    require(exitSeam == 137, s"seam child must die by OUR halt(137), exited $exitSeam")
+    require(exitSeam == 137, s"seam child must die by OUR halt(137), exited $exitSeam " +
+      s"(see $root/child_seam.log)")
     val ledgerRunsAfterSeam = listRunDirs(s"$root/ledger", "jobRunId")
     // File mode produces exactly NRuns batches (maxFilesPerTrigger=1 over
     // NRuns staged chunks); stub mode's batch count is emergent from the
@@ -111,10 +114,8 @@ object CrashRestartRehearsal {
     require(!new File(s"$root/conform").exists(),
       "seam kill must land before conform ran")
     val (exitNone, wNone) = wall(runChild(root, sfDir, "none", source))
-    require(exitNone == 0, s"final child must complete, exited $exitNone; " +
-      "its log ends:\n" + new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/child_none.log")), "UTF-8")
-        .linesIterator.toSeq.takeRight(20).mkString("\n"))
+    require(exitNone == 0, s"final child must complete, exited $exitNone " +
+      s"(see $root/child_none.log)")
     val childJson = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/child_result.json")), "UTF-8").trim
     val sourceName = if (source == "stub") "graft-kafka-stub" else "file"

@@ -13,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IncrementalReadSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    TestSpark.spark // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SessionProfile.session("4", "4", extensions = true)
-    SparkSession.setDefaultSession(TestSpark.spark)
-    SparkSession.setActiveSession(TestSpark.spark)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extended()
 
   test("registered tables get the watermark filter injected and partition-pruned") {
     import spark.implicits._

@@ -48,12 +48,4 @@ class SessionProfileSpec extends AnyFunSuite {
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
     assert(!SessionProfile.conf("4", "4").exists(_._1.contains("checkpoint")))
   }
-
-  test("a built session carries the profile's conf") {
-    val spark = TestSpark.spark
-    assert(spark.sparkContext.master == "local[4]")
-    SessionProfile.conf("4", "4").filter(_._1.startsWith("spark.sql.")).foreach {
-      case (k, v) => assert(spark.conf.get(k) == v, k)
-    }
-  }
 }

@@ -12,17 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ShardedTopKSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SessionProfile.session("4", "4", extensions = true)
-    s.conf.set("spark.graft.topk.lowCardCols", "lang,event_type")
-    s.conf.set("spark.graft.topk.shards", "8")
-    SparkSession.setDefaultSession(TestSpark.spark)
-    SparkSession.setActiveSession(TestSpark.spark)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extended(
+    "spark.graft.topk.lowCardCols" -> "lang,event_type",
+    "spark.graft.topk.shards" -> "8")
 
   private def naiveTopK(s: SparkSession, k: Int) = {
     import s.implicits._

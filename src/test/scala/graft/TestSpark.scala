@@ -7,6 +7,26 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = SessionProfile.session("4", "4")
+
+  /** A sibling session over the shared context carrying [[GraftExtensions]]
+    * (extensions are per-session state), with `extra` settings on top of
+    * the profile's. [[spark]] is forced FIRST and stays the active and
+    * default session: a lazy plain session initialized while this one is
+    * active would alias it via getOrCreate, silently giving the "plain"
+    * session the extensions.
+    */
+  def extended(extra: (String, String)*): SparkSession = {
+    val plain = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = (SessionProfile.conf("4", "4") ++ extra)
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    SparkSession.setDefaultSession(plain)
+    SparkSession.setActiveSession(plain)
+    s
+  }
 }
 
 /** Kafka-shaped test record (top-level: inner case classes break encoder

@@ -15,22 +15,11 @@ class TopKPlanSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   /** A session carrying GraftExtensions (hint rule + planner strategy).
-    * TestSpark.spark is forced FIRST: a lazy plain session initialized
-    * while this one is active would alias it via getOrCreate, silently
-    * giving the "plain" session the extensions. AQE is off so the
-    * partial/final exec pair is visible to plan.collect (the
-    * AdaptiveSparkPlanExec wrapper hides its executed subtree).
+    * AQE is off so the partial/final exec pair is visible to plan.collect
+    * (the AdaptiveSparkPlanExec wrapper hides its executed subtree).
     */
-  private lazy val extended: SparkSession = {
-    val plain = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SessionProfile.session("4", "4", extensions = true)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    SparkSession.setDefaultSession(plain)
-    SparkSession.setActiveSession(plain)
-    s
-  }
+  private lazy val extended: SparkSession =
+    TestSpark.extended("spark.sql.adaptive.enabled" -> "false")
 
   private def windowTopK(df: DataFrame, keys: Seq[String],
                          order: Seq[(String, Boolean)], k: Int): DataFrame = {
