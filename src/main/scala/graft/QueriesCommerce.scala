@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{Dedup, Domains, Quant, Sampling, Similarity, Text}
-import graft.ops.{Events, Relational}
+import graft.ops.{Events, Materialize, Relational}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -797,8 +797,8 @@ private[graft] trait QueriesCommerce { this: Queries.type =>
     val li = t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
     // the per-(order, supplier) flags feed the per-order rollup AND the
-    // credit join: materialize once (one fact join instead of two)
-    val perSupp = graft.functions.Graph.materialize(
+    // credit join: cut once (one fact join instead of two)
+    val perSupp = Materialize.cut(
       li.join(o, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
           (datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate"))) > 60)

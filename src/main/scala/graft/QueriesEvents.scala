@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{Dedup, Domains, Quant, Sampling, Similarity, Text}
-import graft.ops.{Events, Relational}
+import graft.ops.{Events, Materialize, Relational}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1084,9 +1084,9 @@ private[graft] trait QueriesEvents { this: Queries.type =>
         (dec2(col("value")) * 100).cast("long").as("cents"))
     val maxDay = p.agg(max(col("day")).as("mx"))
     // one per-user rollup feeds FIVE consumers (the population scalar,
-    // three quintile summaries, the final scoring joins): materialize it
+    // three quintile summaries, the final scoring joins): cut it
     // once or the events scan+rollup re-derives per consumer
-    val users = graft.functions.Graph.materialize(
+    val users = Materialize.cut(
       p.crossJoin(broadcast(maxDay))
         .groupBy(col("user_id"))
         .agg(min(expr("mx - day")).as("recency"),
@@ -1211,8 +1211,8 @@ private[graft] trait QueriesEvents { this: Queries.type =>
         (dec2(col("value")) * 100).cast("long").as("cents"))
     val mid = p.agg(expr("min(day) + (max(day) - min(day) + 1L) DIV 2").as("mid"))
     // four consumers (population scalar, two quintile summaries, the
-    // final joins) share one per-user rollup: materialize it (q179's seam)
-    val users = graft.functions.Graph.materialize(
+    // final joins) share one per-user rollup: cut it (q179's cut)
+    val users = Materialize.cut(
       p.crossJoin(broadcast(mid))
         .groupBy(col("user_id"))
         .agg(sum(when(col("day") < col("mid"), col("cents")).otherwise(0L)).as("v1"),
@@ -1323,8 +1323,8 @@ private[graft] trait QueriesEvents { this: Queries.type =>
     */
   def audienceOverlap(spark: SparkSession, dir: String): DataFrame = {
     // the bitmap table feeds three consumers (sizes + both join sides):
-    // materialize the compressed frame so events scan+fold runs once
-    val lanes = graft.functions.Graph.materialize(
+    // cut the compressed frame so events scan+fold runs once
+    val lanes = Materialize.cut(
       t(spark, dir, "events")
         .select(col("event_type"), expr("user_id DIV 32").as("chunk"),
           expr("shiftleft(1L, CAST(user_id % 32 AS INT))").as("bit"))

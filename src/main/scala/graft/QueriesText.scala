@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{Dedup, Domains, Quant, Sampling, Similarity, Text}
-import graft.ops.{Events, Relational}
+import graft.ops.{Events, Materialize, Overlap, Relational}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -639,32 +639,6 @@ private[graft] trait QueriesText { this: Queries.type =>
     * gram-hash semi join, per-stratum ntile); the funnel adds nothing but
     * the final 6-row count union.
     */
-  /** Stage-boundary materialization for multi-stage funnels, selected by
-    * the session conf `spark.graft.funnel.storage`:
-    *
-    *  - unset → `persist()` (MEMORY_AND_DISK) — the local/interactive
-    *    default;
-    *  - a StorageLevel name (`DISK_ONLY`, `MEMORY_AND_DISK_SER`, …) →
-    *    persist at that level;
-    *  - `checkpoint` → reliable write-through to the q60 seam's
-    *    `spark.graft.checkpoint.dir` — the cluster default for a 100 TB
-    *    funnel, where stage boundaries belong in storage, not executor
-    *    memory, and must survive executor loss.
-    */
-  private[graft] def stageBoundary(spark: SparkSession, df: DataFrame): DataFrame =
-    spark.conf.getOption("spark.graft.funnel.storage") match {
-      case Some("checkpoint") =>
-        val sc = spark.sparkContext
-        spark.conf.getOption("spark.graft.checkpoint.dir").foreach { cd =>
-          if (!sc.getCheckpointDir.exists(_.contains(cd))) sc.setCheckpointDir(cd)
-        }
-        df.checkpoint(eager = false)
-      case Some(level) =>
-        df.persist(org.apache.spark.storage.StorageLevel.fromString(level))
-      case None => df.persist()
-    }
-
-
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir, "documents")
     val ckpt = spark.conf.getOption("spark.graft.checkpoint.dir")
@@ -694,20 +668,20 @@ private[graft] trait QueriesText { this: Queries.type =>
       Text.fingerprint(col("text")).as("fp"),
       gopherOk.as("gopher_ok"), bkt.as("bkt"),
       when(needG5, Text.gramHashArray(col("text"), 5)).as("g5"))
-    // Per-document stage-membership flags, materialized ONCE through the
-    // parquet seam (not persist(): concurrent consumer stages each
-    // materialize a lazy cache independently — the measured
-    // double-compute above; the seam's write job happens-before every
-    // consumer). is_k1 is the exact-dedup keeper flag: row_number = 1 on
-    // (fp, doc_id) ⇔ doc_id = min(doc_id) of its fingerprint group.
-    val flags = graft.ops.Relational.materialize(
+    // Per-document stage-membership flags, computed ONCE by an eager cut
+    // (not persist(): concurrent consumer stages each materialize a lazy
+    // cache independently — the measured double-compute above; the cut's
+    // job happens-before every consumer). is_k1 is the exact-dedup keeper
+    // flag: row_number = 1 on (fp, doc_id) ⇔ doc_id = min(doc_id) of its
+    // fingerprint group.
+    val flags = Materialize.cut(
       enriched.withColumn("is_k1",
         row_number().over(
           Window.partitionBy(col("fp")).orderBy(col("doc_id"))) === 1)
         .drop("fp"), ckpt)
     val k3cond = col("is_k1") && col("gopher_ok") && col("bkt") < 80
     // Decontamination over the PRECOMPUTED gram arrays (both sides read
-    // the flags seam — no second text pass). The id list has exactly ONE
+    // the flags cut — no second text pass). The id list has exactly ONE
     // consumer (the flag join below), so it is NOT seamed: a boundary
     // here would be pure write overhead (the r20 q182/q149 lesson).
     val dropIds = Dedup.contaminatedIdsFromGrams(
@@ -914,22 +888,9 @@ private[graft] trait QueriesText { this: Queries.type =>
     // state), so one batch's small stat jobs back-fill the cores the
     // other's driver round-trips leave idle. The lifecycle proof is
     // unchanged: two append calls, then compaction, then the probe.
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val appends = Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0)
-          .map { pred =>
-            Future {
-              Tfidf.appendToIndex(docs.filter(pred),
-                col("doc_id"), col("text"), path)
-            }
-          }
-        Await.result(Future.sequence(appends),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    }
+    Overlap.all(spark)(Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0)
+      .map(pred => () =>
+        Tfidf.appendToIndex(docs.filter(pred), col("doc_id"), col("text"), path)): _*)
     Tfidf.compactIndex(spark, path)
     Tfidf.sparseTopKIncremental(spark, path,
         docs.filter(col("doc_id") < 5), col("doc_id"), col("text"),
@@ -1056,16 +1017,15 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def scoreCalibration(spark: SparkSession, dir: String): DataFrame =
     // quantileBins reads its input from several branches (summary, join,
-    // whole/straddling) — materialize the narrow scored frame once or the
-    // whole train-and-score pipeline runs per branch. r21: the boundary is
-    // the parquet seam, not persist(): quantileBins' branches all launch
-    // concurrently under AQE and each racing stage materialized the lazy
-    // cache INDEPENDENTLY (the r21 PlanMetrics profile showed the scoring
-    // pipeline executed twice, 5.2 s + 2.1 s accumulated); the seam's
-    // write job happens-before every consumer, so scoring runs exactly
-    // once at any scale.
+    // whole/straddling) — cut the narrow scored frame once or the whole
+    // train-and-score pipeline runs per branch. r21: an eager cut, not
+    // persist(): quantileBins' branches all launch concurrently under AQE
+    // and each racing stage materialized the lazy cache INDEPENDENTLY (the
+    // r21 PlanMetrics profile showed the scoring pipeline executed twice,
+    // 5.2 s + 2.1 s accumulated); the cut's job happens-before every
+    // consumer, so scoring runs exactly once at any scale.
     Sampling.quantileBins(
-        graft.ops.Relational.materialize(
+        Materialize.cut(
           classifierScored(spark, dir).drop("pred"),
           spark.conf.getOption("spark.graft.checkpoint.dir")),
         lit("all"), col("score"), col("doc_id"), n = 10)
@@ -1707,9 +1667,10 @@ private[graft] trait QueriesText { this: Queries.type =>
   def prCurve(spark: SparkSession, dir: String): DataFrame = {
     val cells = 64
     // classifierScored trains and scores; the histogram and its bounds
-    // both scan it, so materialize the narrow (score, label) frame once.
-    val scored = stageBoundary(spark,
-      classifierScored(spark, dir).select(col("score"), col("is_spam")))
+    // both scan it, so cut the narrow (score, label) frame once.
+    val scored = Materialize.cut(
+      classifierScored(spark, dir).select(col("score"), col("is_spam")),
+      spark.conf.getOption("spark.graft.checkpoint.dir"))
     val bounds = scored.agg(min(col("score")).as("__lo"),
       max(col("score")).as("__hi"))
     val hist = scored.crossJoin(broadcast(bounds))
@@ -2055,17 +2016,16 @@ private[graft] trait QueriesText { this: Queries.type =>
     val scored = graft.functions.LmScore
       .score(docs, col("doc_id"), col("text"), model)
       .select(col("doc_id"), expr("lm_score DIV n_bigrams").as("mean_micro"))
-    // r20: MATERIALIZE the scored base once. `base` feeds FOUR unshareable
+    // r20: CUT the scored base once. `base` feeds FOUR unshareable
     // consumers (the budget aggregate, the shard-prefix aggregate, the
     // full-slice filter and the boundary window), and the executed-plan
     // profile showed the whole scoring pipeline — bigram model aggregate
     // included — replicated in each (14 copies of the ~1.7 s aggregates at
-    // sf0.1). The frame is 5 narrow columns per doc, so the
-    // materialization is corpus-ROW-bounded, never corpus-TEXT-sized;
-    // scoring now runs once. This is the orthogonal complement of the
+    // sf0.1). The frame is 5 narrow columns per doc, so the cut is
+    // corpus-ROW-bounded, never corpus-TEXT-sized; scoring now runs once. This is the orthogonal complement of the
     // falsified fusion above: don't widen the hot aggregate, just stop
     // re-running it.
-    val base = graft.ops.Relational.materialize(docs
+    val base = Materialize.cut(docs
       .select(col("doc_id"), col("lang"),
         size(Text.tokens(Text.normalized(col("text")))).cast("long").as("tok"))
       .join(scored, "doc_id")
@@ -2209,29 +2169,18 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def dupCoreStrength(spark: SparkSession, dir: String): DataFrame = {
     val ckpt = spark.conf.getOption("spark.graft.checkpoint.dir")
-    // one LSH pipeline feeds BOTH peels: materialize the candidate list
-    // once, or each kCore call re-derives shingles→minhash→bands
-    val pairs = graft.functions.Graph.materialize(
-      minhashPairs(spark, dir), ckpt)
+    // one LSH pipeline feeds BOTH peels: cut the candidate list once, or
+    // each kCore call re-derives shingles→minhash→bands
+    val pairs = Materialize.cut(minhashPairs(spark, dir), ckpt)
     // r21: the k=2 and k=3 peels are INDEPENDENT driver-sequential loops
-    // over the one materialized pair list — the q199 two-CC-runs shape, so
-    // they get the same guide-§2.6 treatment: two driver threads, each
-    // peel's round jobs back-filling the cores the other's driver
-    // round-trips leave idle. Each kCore call owns a private UUID seam
-    // dir; the shared `pairs` seam is read-only to both.
-    val cores = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fs = Seq(2, 3).map { k =>
-        k -> Future {
-          graft.functions.Graph.kCore(pairs, col("id_a"), col("id_b"),
-            k, checkpointDir = ckpt)
-        }
-      }
-      fs.map { case (k, f) =>
-        k -> Await.result(f, scala.concurrent.duration.Duration.Inf)
-      }
-    }
+    // over the one cut pair list — the q199 two-CC-runs shape, so they get
+    // the same guide-§2.6 treatment: two driver threads, each peel's round
+    // jobs back-filling the cores the other's driver round-trips leave
+    // idle. The shared `pairs` cut is read-only to both.
+    val ks = Seq(2, 3)
+    val cores = ks.zip(Overlap.all(spark)(ks.map(k => () =>
+      graft.functions.Graph.kCore(pairs, col("id_a"), col("id_b"),
+        k, checkpointDir = ckpt)): _*))
     cores.map { case (k, core) =>
       val nodes = core.select(col("a").as("id"))
         .unionAll(core.select(col("b").as("id"))).distinct()
@@ -2285,8 +2234,8 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def madOutliers(spark: SparkSession, dir: String): DataFrame = {
     // (lang, length) pairs feed the population counts, the first median,
-    // and the deviation pass: materialize the two-long projection once
-    val d = graft.functions.Graph.materialize(
+    // and the deviation pass: cut the two-long projection once
+    val d = Materialize.cut(
       t(spark, dir, "documents").select(col("lang"), col("n_chars").as("v")),
       spark.conf.getOption("spark.graft.checkpoint.dir"))
     val n = d.groupBy(col("lang")).agg(count(lit(1)).as("n"))
@@ -2368,14 +2317,14 @@ private[graft] trait QueriesText { this: Queries.type =>
     // but was measured 35% slower at sf10 (the min/first buffers outweigh
     // the extra verifies on this fixture's genuinely-similar candidates).
     //
-    // r20: materialize the shingle sets ONCE. ppjoin consumes its input
+    // r20: cut the shingle sets ONCE. ppjoin consumes its input
     // from three unshareable subtrees (the df aggregate, the prefix
     // window, the two verify sides), and the r20 profile showed the
     // charShingles+array_sort tokenization re-running in each (~2 s × 3
     // of the 6.5 s wall at sf0.1). The thin above caps this relation at
-    // ~8192 docs BY CONSTRUCTION, so the materialization is bounded at
-    // every scale — exactly the stage-boundary discipline q85 uses.
-    Dedup.ppjoin(graft.ops.Relational.materialize(sets,
+    // ~8192 docs BY CONSTRUCTION, so the cut is bounded at every scale —
+    // exactly the stage-boundary discipline q85 uses.
+    Dedup.ppjoin(Materialize.cut(sets,
         spark.conf.getOption("spark.graft.checkpoint.dir")), 13, 20)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -2409,22 +2358,17 @@ private[graft] trait QueriesText { this: Queries.type =>
     // from two driver threads (guide §2.6) lets one run's round jobs
     // back-fill the cores the other's driver round-trips leave idle (at
     // sf0.1 neither saturates the box; on a cluster 2 jobs in flight is
-    // the guide's sweet spot). Each run owns a private UUID seam dir, and
-    // both pass the same checkpoint dir, so there is no shared state.
-    val (before, after) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fb = Future { cc(dOld).withColumnRenamed("cluster", "c_before") }
-      val fa = Future { cc(d).withColumnRenamed("cluster", "c_after") }
-      (Await.result(fb, scala.concurrent.duration.Duration.Inf),
-        Await.result(fa, scala.concurrent.duration.Duration.Inf))
-    }
+    // the guide's sweet spot). Both pass the same checkpoint dir, so there
+    // is no shared state.
+    val Seq(before, after) = Overlap.all(spark)(
+      () => cc(dOld).withColumnRenamed("cluster", "c_before"),
+      () => cc(d).withColumnRenamed("cluster", "c_after"))
     // old docs only: new docs may ADD clusters; the merge signal lives in
     // how many distinct labels the old population keeps. Two separate
     // distinct aggregates (q36's no-Expand discipline) over the
-    // materialized join; docs first clustered only AFTER the release are
+    // cut join; docs first clustered only AFTER the release are
     // intentionally out of scope (they are new structure, not merges).
-    val joined = graft.ops.Relational.materialize(
+    val joined = Materialize.cut(
       before.join(after, "id"), ckpt)
     joined.agg(count(lit(1)).as("n_old_clustered_docs"))
       .crossJoin(joined.select(col("c_before")).distinct()

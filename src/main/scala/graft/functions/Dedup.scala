@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -237,27 +238,21 @@ object Dedup {
     * `checkpoint()` against that (HDFS/object-store) directory, which is the
     * cluster-mode configuration; `None` keeps the local-mode fast path.
     *
-    * NOTE `setCheckpointDir` is SESSION-GLOBAL state: it is only called
-    * when the context has no checkpoint dir or points elsewhere, so
-    * same-dir concurrent callers don't race — but two concurrent callers
-    * passing DIFFERENT dirs still contend (last set wins; both remain
-    * correct, files just land in one dir). Per-iteration checkpoint files
-    * are not cleaned up here; set
+    * Every cut is a [[graft.ops.Materialize.cut]] (see its note on the
+    * session-global checkpoint dir). Per-iteration checkpoint files are
+    * not cleaned up here; set
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (as
     * [[graft.Bench]] does) to have the ContextCleaner remove them as the
     * checkpointed frames are GC'd, or clean the directory after the job.
     */
   def connectedComponentsIterated(pairs: DataFrame, maxIter: Int = 10,
                                   checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    // Materialization: the loop-invariant edge list goes through
-    // `seam.mat` (one parquet write + read-back under a delete-on-exit
-    // UUID dir); each round is a `seam.cutCounted` checkpoint cut whose
-    // `observe()` returns the changed-label count from the cut's own job —
-    // one job per round, no separate convergence probe. Round checkpoints
-    // belong to the ContextCleaner, so the returned labels frame stays
-    // readable for as long as the caller holds it.
-    val seam = graft.ops.Materialize.seam(pairs.sparkSession, checkpointDir)
-    // Materialize the edge list once: `pairs` is typically the output of the
+    // Cuts: the loop-invariant edge list and every round are checkpoint
+    // cuts; a round's `cutCounted` observe returns the changed-label count
+    // from the cut's own job — one job per round, no separate convergence
+    // probe. Checkpoints belong to the ContextCleaner, so the returned
+    // labels frame stays readable for as long as the caller holds it.
+    // Cut the edge list once: `pairs` is typically the output of the
     // whole LSH candidate pipeline, and every iteration references edges
     // twice — without this cut the shingle→minhash→band derivation would
     // re-run O(iterations) times.
@@ -270,8 +265,8 @@ object Dedup {
     // costs CPU but no wall. (r20 A/B: a single-pass explode-of-2-structs
     // variant serialized the derivation into one pipeline and measured
     // 2.4→3.1 s SLOWER — falsified and reverted.)
-    val edges = seam.mat(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))), "edges")
+    val edges = Materialize.cut(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))), checkpointDir)
     // Round 1 is SPECIALIZED: under the identity seed (label(id) = id) the
     // generic step `least(label, min over neighbors of label(dst))`
     // simplifies to `least(src, min(dst))` — one aggregate over the
@@ -303,8 +298,8 @@ object Dedup {
             .select(col("id"), col("cluster").as("__old"),
               least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
         }
-      val (updated, moved) = seam.cutCounted(stepped,
-        count(when(col("cluster") =!= col("__old"), lit(1))))
+      val (updated, moved) = Materialize.cutCounted(stepped,
+        count(when(col("cluster") =!= col("__old"), lit(1))), checkpointDir)
       labels = updated.select(col("id"), col("cluster"))
       changed = moved
       converged = changed == 0

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,37 +31,20 @@ import org.apache.spark.sql.functions._
   * arrives pre-aggregated to (src, dst, weight): document-level fan-in
   * was collapsed by the caller's groupBy, so iteration cost is O(|edges|)
   * narrow rows, never O(|corpus|). The loop invariants are computed once,
-  * before the first round: each seamed edge row carries its source's
+  * before the first round: each cut edge row carries its source's
   * out-weight `out_u`, and `n_hosts` is the observed row count of the
-  * seamed host list, so `base` enters every round as a literal. A round's
+  * cut host list, so `base` enters every round as a literal. A round's
   * one group-by also reads a zero contribution per host, which keeps
   * hosts without inflow in the state at `(100 - dampingPct) * base DIV
   * 100` without a join. Iteration count is fixed (default 8 — power
   * iteration converges geometrically at damping 0.85). Each round's
   * state is lineage-CUT (localCheckpoint, or a reliable `checkpoint()`
   * when `checkpointDir` is set — the cluster-mode configuration), the
-  * same discipline and seam as [[Dedup.connectedComponentsIterated]]:
+  * same discipline and cut as [[Dedup.connectedComponentsIterated]]:
   * without the cut, Catalyst re-analyzes a plan that grows by one
   * join+agg per round and iteration time goes quadratic.
   */
 object Graph {
-
-  /** Materialize a derived frame and cut its lineage — localCheckpoint in
-    * local mode, reliable `checkpoint()` against `checkpointDir` on a
-    * cluster (the shared discipline of every iterative operator here).
-    * Callers feeding ONE derived pipeline into SEVERAL iterative consumers
-    * (q186's two peels over one LSH candidate list) materialize once and
-    * pass the cut frame, instead of re-deriving per consumer.
-    */
-  def materialize(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    // r20: checkpoint-flavored cut — every caller here materializes a
-    // NARROW frame (pair lists, projections, per-key aggregates) whose
-    // recompute is cheap next to parquet's flat write-job overhead; the
-    // interleaved A/B put the checkpoint leg ahead for q186/q193-class
-    // callers. Expensive-lineage boundaries (q156's scored base, q196's
-    // shingle sets) go through Relational.materialize's parquet
-    // round-trip instead.
-    graft.ops.Materialize.seam(df.sparkSession, checkpointDir).cut(df)
 
   /** Weighted integer PageRank. `edges` must be pre-aggregated
     * (src, dst, weight) with src ≠ dst; returns (host, rank) for every
@@ -72,15 +56,16 @@ object Graph {
                   scale: Long = 1000000000L,
                   checkpointDir: Option[String] = None): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val seam = graft.ops.Materialize.seam(edges.sparkSession, checkpointDir)
-    // Materialize the (usually derived) edge list once, each row carrying
-    // its source's out-weight: every round references it, and cutting
-    // here caps the per-round plan at one join + one aggregate.
-    val e = seam.cut(edges.select(src.as("src"), dst.as("dst"),
+    // Cut the (usually derived) edge list once, each row carrying its
+    // source's out-weight: every round references it, and cutting here
+    // caps the per-round plan at one join + one aggregate.
+    val e = Materialize.cut(edges.select(src.as("src"), dst.as("dst"),
         weight.cast("long").as("w"))
-      .withColumn("ow", sum(col("w")).over(Window.partitionBy(col("src")))))
-    val (hosts, nHosts) = seam.cutCounted(e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct(), count(lit(1)))
+      .withColumn("ow", sum(col("w")).over(Window.partitionBy(col("src")))),
+      checkpointDir)
+    val (hosts, nHosts) = Materialize.cutCounted(e.select(col("src").as("host"))
+      .union(e.select(col("dst").as("host"))).distinct(), count(lit(1)),
+      checkpointDir)
     // Same truncating double division as `CAST(scale / n_hosts AS BIGINT)`.
     val base = if (nHosts == 0) 0L else (scale.toDouble / nHosts).toLong
     val noInflow = hosts.select(col("host"), lit(0L).as("contrib"))
@@ -95,7 +80,7 @@ object Graph {
       // Cut every 2 rounds and after the last: a two-round uncut chain
       // costs Catalyst nothing, and fewer cuts mean less checkpoint I/O —
       // the dominant per-round cost.
-      if (i % 2 == 0 || i == iterations) r = seam.cut(r)
+      if (i % 2 == 0 || i == iterations) r = Materialize.cut(r, checkpointDir)
     }
     r
   }
@@ -184,15 +169,14 @@ object Graph {
             maxRounds: Int = 64,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && maxRounds >= 1)
-    // Every round is a checkpoint cut ([[graft.ops.Materialize.Seam]]) whose
+    // Every round is a checkpoint cut ([[Materialize.cutCounted]]) whose
     // edge count rides the checkpoint job via observe instead of being its
-    // own action. Callers pass a PRE-MATERIALIZED pair list (q186
-    // materializes the LSH pipeline once for both peels), so the
-    // canonicalized-edge init is cheap lineage too.
-    val seam = graft.ops.Materialize.seam(pairs.sparkSession, checkpointDir)
-    var (edges, prevCount) = seam.cutCounted(
+    // own action. Callers pass a pre-cut pair list (q186 cuts the LSH
+    // pipeline once for both peels), so the canonicalized-edge init is
+    // cheap lineage too.
+    var (edges, prevCount) = Materialize.cutCounted(
       pairs.select(least(a, b).as("a"), greatest(a, b).as("b"))
-        .filter(col("a") =!= col("b")).distinct(), count(lit(1)))
+        .filter(col("a") =!= col("b")).distinct(), count(lit(1)), checkpointDir)
     var i = 0
     var peeled = 0L
     var stable = prevCount == 0
@@ -201,10 +185,10 @@ object Graph {
         .groupBy(col("id")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("id"))
-      val (nextEdges, after) = seam.cutCounted(edges
+      val (nextEdges, after) = Materialize.cutCounted(edges
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")), count(lit(1)))
+        .select(col("a"), col("b")), count(lit(1)), checkpointDir)
       edges = nextEdges
       stable = after == prevCount
       peeled = prevCount - after

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.Overlap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -306,27 +307,16 @@ object Tfidf {
       // writes then read cached blocks and are INDEPENDENT small jobs —
       // overlapping them from driver threads (guide §2.6) halves their
       // wall, which at the measured ~0.3 s/job overhead is most of what
-      // they cost. A private 2-thread pool, not the global EC: blocking
-      // Await on the shared default pool deadlocks when a caller nests
-      // this inside its own global-EC future (q239 overlaps two appends).
+      // they cost ([[Overlap.all]]; q239 nests two appends inside its own
+      // overlap).
       staged.write.mode("overwrite").parquet(s"$tmpDir/postings")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val fTerm = Future {
-          staged.groupBy(col("term")).agg(count(lit(1)).as("df"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$tmpDir/term_stats")
-        }
-        val fCorpus = Future {
-          docs.agg(count(lit(1)).as("n_docs")).crossJoin(
-              staged.agg(coalesce(sum(col("tf_d")), lit(0L)).cast("long")
-                .as("total_tokens")))
-            .coalesce(1).write.mode("overwrite").parquet(s"$tmpDir/corpus_stats")
-        }
-        Await.result(Future.sequence(Seq(fTerm, fCorpus)),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+      Overlap.all(spark)(
+        () => staged.groupBy(col("term")).agg(count(lit(1)).as("df"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmpDir/term_stats"),
+        () => docs.agg(count(lit(1)).as("n_docs")).crossJoin(
+            staged.agg(coalesce(sum(col("tf_d")), lit(0L)).cast("long")
+              .as("total_tokens")))
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmpDir/corpus_stats"))
       // Publish: move the batch's data files into the live tables under
       // batch-unique names. mkdirs + rename are atomic per file on any
       // Hadoop FS; concurrent publishers never collide (names embed the
@@ -437,33 +427,17 @@ object Tfidf {
     // writing disjoint outputs — run them as overlapped driver-thread jobs
     // (guide §2.6): the two stat merges are overhead-dominated and ride
     // inside the postings rewrite's wall. The swap below stays sequential.
-    // Private pool, not the global EC (the appendToIndex discipline): a
-    // blocking Await on the shared default pool can deadlock when nested
-    // inside a caller's own future.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val jobs = Seq(
-        Future {
-          spark.read.parquet(s"$path/postings")
-            .repartition(col("term")).sortWithinPartitions(col("term"), col("d"))
-            .write.mode("overwrite").parquet(s"$tmp/postings")
-        },
-        Future {
-          spark.read.parquet(s"$path/term_stats")
-            .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$tmp/term_stats")
-        },
-        Future {
-          spark.read.parquet(s"$path/corpus_stats")
-            .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-              sum(col("total_tokens")).cast("long").as("total_tokens"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$tmp/corpus_stats")
-        })
-      Await.result(Future.sequence(jobs),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    Overlap.all(spark)(
+      () => spark.read.parquet(s"$path/postings")
+        .repartition(col("term")).sortWithinPartitions(col("term"), col("d"))
+        .write.mode("overwrite").parquet(s"$tmp/postings"),
+      () => spark.read.parquet(s"$path/term_stats")
+        .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/term_stats"),
+      () => spark.read.parquet(s"$path/corpus_stats")
+        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+          sum(col("total_tokens")).cast("long").as("total_tokens"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/corpus_stats"))
     Seq("postings", "term_stats", "corpus_stats").foreach { t =>
       val live = new org.apache.hadoop.fs.Path(root, t)
       val next = new org.apache.hadoop.fs.Path(tmp, t)

@@ -178,28 +178,6 @@ object Relational {
     df.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Materialize a derived frame and cut its lineage — localCheckpoint in
-    * local mode, reliable `checkpoint()` against `checkpointDir` on a
-    * cluster. The seam for one-derived-pipeline-many-consumers shapes:
-    * without it, each consumer re-derives the upstream
-    * scan+join+aggregate (q179's per-user rollup fed five consumers and
-    * re-ran the events pipeline five times). NOT free — the q182/q149
-    * lesson: when every consumer takes the SAME shuffle of the shared
-    * frame, runtime exchange reuse already dedupes it and a checkpoint
-    * only adds I/O. The seam wins exactly when consumers need DIFFERENT
-    * downstream exchanges of the frame (q179's three per-metric
-    * re-aggregations, q194's sizes-vs-join-sides) — reuse cannot match
-    * those, so the upstream re-derives per consumer. Seams are added
-    * measured, not by default.
-    */
-  def materialize(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    // r20: parquet write + read-back ([[graft.ops.Materialize]]) instead of
-    // `checkpoint(eager = true)` — the reliable checkpoint computed every
-    // frame TWICE (eager count, then the checkpoint-file write re-running
-    // the lineage); the round-trip computes once and truncates lineage
-    // identically, on the same storage.
-    Materialize.once(df, checkpointDir)
-
   /** Range-sharded cumulative sum over a distinct-value summary: exact
     * running totals of each `weights` column in `v`-order (ascending or
     * descending, inclusive of the current row) WITHOUT ever sorting the

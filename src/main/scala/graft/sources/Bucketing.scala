@@ -28,9 +28,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * files alone (bucket ids in their names) are not enough. [[Tables.load]]
   * calls [[resolve]] first, so EVERY catalog query picks up the
   * exchange-free plan with no query changes the moment the layout exists.
-  * Set `spark.graft.bucketed.disabled=true` (session conf) or
-  * `SPARK_GRAFT_NO_BUCKETED=1` to force the raw path — the A/B knob the
-  * probe artifacts are measured with.
+  * Set `spark.graft.bucketed.disabled=true` (session conf, or
+  * `-Dspark.graft.bucketed.disabled=true` on a main's JVM) to force the
+  * raw path — the A/B knob the probe artifacts are measured with.
   *
   * == When to declare one (measured trade-off) ==
   *
@@ -271,8 +271,7 @@ object Bucketing {
   }
 
   private def disabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.bucketed.disabled").contains("true") ||
-      sys.env.get("SPARK_GRAFT_NO_BUCKETED").contains("1")
+    spark.conf.getOption("spark.graft.bucketed.disabled").contains("true")
 
   private def serve(spark: SparkSession, route: Option[(String, String)]):
       Option[DataFrame] = route match {

@@ -76,8 +76,9 @@ object Tables {
     * (the warehouse move that turns q174's measured 1 GB/core raw-parquet
     * sort-merge floor into an in-place 0.25 GB/core read). Routing is
     * transparent to correctness by construction — the layout is a
-    * row-identical rewrite of the raw table — and disabled via
-    * `spark.graft.bucketed.disabled=true` for raw-leg A/B runs.
+    * row-identical rewrite of the raw table — and disabled via the conf
+    * key `spark.graft.bucketed.disabled=true` (or the same `-D` system
+    * property on a main's JVM) for raw-leg A/B runs.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df =

@@ -22,7 +22,8 @@ package graft.tools
   *     tools/run_bench_raw.sh graft.Bench q174_variance_bridge --repeats 3
   * }}}
   * measures the routed leg at the 8 g / 32-core = 0.25 GB/core heap that
-  * OOMs the raw layout (SPARK_GRAFT_NO_BUCKETED=1 forces the raw leg).
+  * OOMs the raw layout (`GRAFT_EXTRA_JAVA_OPTS=-Dspark.graft.bucketed.disabled=true`
+  * forces the raw leg).
   * This main remains for the plan-pinned, artifact-writing form of that
   * run.
   *

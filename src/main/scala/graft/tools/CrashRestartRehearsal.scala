@@ -122,7 +122,7 @@ object CrashRestartRehearsal {
     // Bound-check the recorded micro-batch durations across all surviving
     // children (the reference's BATCH_DURATION expectation): every batch
     // within the budget, worst one named in the artifact.
-    val durBudgetMs = sys.env.getOrElse("SPARK_GRAFT_BATCH_BUDGET_MS", "600000").toLong
+    val durBudgetMs = 600000L
     val durations = Seq("seam", "none").flatMap { m =>
       val p = java.nio.file.Paths.get(s"$root/batch_durations_$m.jsonl")
       if (!java.nio.file.Files.exists(p)) Seq.empty

@@ -7,8 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The counted loop seam reads its metric off the checkpoint job itself:
-  * exact under both checkpoint kinds, with no probe job of its own.
+/** The stage cut is one job that evaluates each row once, under both
+  * checkpoint kinds — observed or not — and the counted loop cut reads its
+  * metric off that job, with no probe job of its own.
   */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -31,14 +32,31 @@ class MaterializeSpec extends AnyFunSuite {
   private def frame = spark.range(0, 1000, 1, 4).filter(col("id") % 7 =!= 0).toDF()
   private val expected = (0 until 1000).count(_ % 7 != 0).toLong
 
-  for ((kind, reliable) <- Seq("local" -> false, "reliable" -> true))
+  for ((kind, reliable) <- Seq("local" -> false, "reliable" -> true)) {
+    test(s"cut of an unobserved frame is one $kind checkpoint job evaluating each row once") {
+      SpecIo.withTempDir("cut") { dir =>
+        val evals = spark.sparkContext.longAccumulator(s"cut-evals-$kind")
+        val touch = udf { (id: Long) => evals.add(1); id }
+        val ((cut, n), jobs) = jobsOf {
+          val c = Materialize.cut(frame.select(touch(col("id")).as("id")),
+            if (reliable) Some(dir) else None)
+          (c, evals.value.longValue)
+        }
+        assert(jobs == 1, s"jobs=$jobs")
+        assert(n == expected, s"rows evaluated $n times in total")
+        assert(cut.count() == expected)
+        assert(evals.value == expected, "reading the cut re-ran its lineage")
+      }
+    }
+
     test(s"cutCounted observes its metric on the $kind checkpoint job") {
-      SpecIo.withTempDir("seam-cut") { dir =>
-        val seam = Materialize.seam(spark, if (reliable) Some(dir) else None)
-        val ((cut, n), jobs) = jobsOf(seam.cutCounted(frame, count(lit(1))))
+      SpecIo.withTempDir("cut") { dir =>
+        val ((cut, n), jobs) = jobsOf(Materialize.cutCounted(frame, count(lit(1)),
+          if (reliable) Some(dir) else None))
         assert(n == expected)
         assert(jobs == 1, s"jobs=$jobs")
         assert(cut.count() == expected)
       }
     }
+  }
 }
