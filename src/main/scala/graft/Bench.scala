@@ -122,6 +122,12 @@ object Bench {
         catch { case scala.util.control.NonFatal(_) => () }
         evict()
       }
+    // The repo this main's classes were built in (target/scala-*/classes
+    // sits three levels under it), when there is one.
+    val repoRoot = scala.util.Try(new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+      .getParentFile.getParentFile.getParentFile).toOption
+      .filter(r => new java.io.File(r, "build.sbt").exists())
     // Committed clean-run floor per query (BENCH_REF.json, regenerated when
     // a query's plan changes): internal spread alone cannot distinguish
     // "contended run" from "confirmed regression" when a sustained stall
@@ -133,12 +139,8 @@ object Bench {
     // floor it is emitted under "suspect", making the two states
     // different artifact states.
     val benchRef: Map[String, Double] = {
-      // Resolve against cwd first, then next to this jar's classes (the
-      // repo root) — the floor must not silently disarm when the driver
-      // launches from another directory.
-      val repoRoot = scala.util.Try(new java.io.File(
-        getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-        .getParentFile.getParentFile.getParentFile).toOption
+      // Resolve against cwd first, then the repo root — the floor must not
+      // silently disarm when the driver launches from another directory.
       val candidates =
         sys.env.get("SPARK_GRAFT_BENCH_REF").map(new java.io.File(_)).toList ++
           List(new java.io.File("BENCH_REF.json")) ++
@@ -389,15 +391,13 @@ object Bench {
     // errors + suspects (~300 chars, parseable whole in any tail window).
     val summaryJson =
       s"""{"metric":"total","unit":"sec","value":${r3(total)},"value_q49":${r3(r01Set)},"value_q76":${r3(r06Set)},"sf":"$sfDir","n_queries":${results.size},"errors":$errsFull,"suspect":$suspect,"warn":$warnJson,"flag_load":$flagLoadJson,"flag_hiload":$flagHiLoadJson,"hiload_line":${rl(hiLoadLine)},"box_drift_suspected":$boxDrift,"loadavg":[$loadStart,$loadEnd],"queries":$qsFull,"detail":"$detailPath"}"""
-    val summaryPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .orElse {
-        val repoRoot = scala.util.Try(new java.io.File(
-          getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-          .getParentFile.getParentFile.getParentFile).toOption
-          .filter(r => new java.io.File(r, "build.sbt").exists())
-        repoRoot.orElse(Some(new java.io.File(".")))
-          .map(r => new java.io.File(r, "bench_out/last_run.json").getPath)
-      }.get
+    // A query-filtered run writes its summary next to the detail file, so
+    // it never replaces the committed full-catalog summary.
+    val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (only.isDefined) new java.io.File(new java.io.File(detailPath).getAbsoluteFile
+        .getParentFile, "graft_bench_summary.json").getPath
+      else new java.io.File(repoRoot.getOrElse(new java.io.File(".")),
+        "bench_out/last_run.json").getPath)
     // A failed summary write must not leave stdout advertising the path —
     // the reader would pick up a STALE prior run's file as if it were
     // current. On failure stdout carries "summary":null.
@@ -423,6 +423,6 @@ object Bench {
       .mkString("[", ",", "]")
     println(
       s"""{"metric":"total","unit":"sec","value":${r3(total)},"value_q49":${r3(r01Set)},"value_q76":${r3(r06Set)},"sf":"$sfDir","n_queries":${results.size},"n_errors":${erred.size},"errors":$errsShort,"n_suspect":$nSuspect,"suspect":$suspectShort,"n_warn":${warned.size},"warn":$warnShort,"n_flag_hiload":${flagHiLoad.size},"box_drift_suspected":$boxDrift,"loadavg":[$loadStart,$loadEnd],"summary":$summaryField,"detail":"$detailPath"}""")
-    spark.stop()
+    SessionProfile.stop(spark)
   }
 }

@@ -58,4 +58,15 @@ object SessionProfile {
     Logs.quietBoundedWindowWarnings()
     spark
   }
+
+  /** Stop `spark` and delete the `<context-uuid>` tree its reliable
+    * checkpoints went under: the ContextCleaner removes checkpointed RDDs
+    * but never that tree, so each session would leave one behind.
+    */
+  def stop(spark: SparkSession): Unit = {
+    val tree = spark.sparkContext.getCheckpointDir.map(new org.apache.hadoop.fs.Path(_))
+    val fs = tree.map(_.getFileSystem(spark.sparkContext.hadoopConfiguration))
+    spark.stop()
+    for (t <- tree; f <- fs) f.delete(t, true)
+  }
 }

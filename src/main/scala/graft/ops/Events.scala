@@ -33,17 +33,6 @@ object Events {
       .drop("prev_ts", "new_session")
   }
 
-  /** Per-session rollup after [[sessionize]]. */
-  def sessionStats(sessions: DataFrame, userCol: Column, tsCol: Column,
-                   valueCol: Column): DataFrame =
-    sessions
-      .groupBy(userCol, col("session_seq"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(tsCol).as("session_start"),
-        max(tsCol).as("session_end"),
-        sum(valueCol).as("session_value"))
-
   /** Tumbling-window aggregation, batch twin of the streaming
     * `groupBy(window($"ts", d))` aggregation. Window start is floored to the
     * duration — identical semantics to `window()` with no slide.

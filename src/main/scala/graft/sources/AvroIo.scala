@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
-
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -361,18 +359,5 @@ object AvroIo {
         rows
       }
     spark.createDataFrame(rdd, full)
-  }
-
-  /** One record round-trip through avro binary — used by specs to pin the
-    * container encoding itself, not just the layout.
-    */
-  private[graft] def roundTripBytes(schema: Schema, rec: GenericRecord): GenericRecord = {
-    val out = new ByteArrayOutputStream()
-    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-    w.create(schema, out); w.append(rec); w.close()
-    val s = new DataFileStream[GenericRecord](
-      new java.io.ByteArrayInputStream(out.toByteArray),
-      new GenericDatumReader[GenericRecord]())
-    try s.iterator().next() finally s.close()
   }
 }

@@ -119,8 +119,6 @@ object BucketedFactProbe {
           plan.contains("_bucketed/orders"),
           "probe requires the declared layout (run `layout` first):\n" +
             plan.take(1500))
-        if (sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN"))
-          println("PROBE PLAN:\n" + plan)
         val passes = (1 to repeats).map { _ =>
           val t0 = System.nanoTime()
           val rows = q.count()

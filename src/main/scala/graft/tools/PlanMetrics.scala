@@ -95,6 +95,6 @@ object PlanMetrics {
       lastExecuted.foreach(walk(_, 0, out))
       println(out.result())
     }
-    spark.stop()
+    graft.SessionProfile.stop(spark)
   }
 }
