@@ -804,8 +804,7 @@ private[graft] trait QueriesCommerce { this: Queries.type =>
           (datediff(to_date(col("l_shipdate")), to_date(col("o_orderdate"))) > 60)
             .cast("long").as("late"))
         .groupBy(col("ok"), col("sk"))
-        .agg(max(col("late")).as("any_late")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+        .agg(max(col("late")).as("any_late")))
     val perOrder = perSupp.groupBy(col("ok"))
       .agg(count(lit(1)).as("n_supp"), sum(col("any_late")).as("n_late"))
     perSupp.join(perOrder, "ok")

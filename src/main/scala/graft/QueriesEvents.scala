@@ -1090,8 +1090,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
       p.crossJoin(broadcast(maxDay))
         .groupBy(col("user_id"))
         .agg(min(expr("mx - day")).as("recency"),
-          count(lit(1)).as("frequency"), sum(col("cents")).as("monetary")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+          count(lit(1)).as("frequency"), sum(col("cents")).as("monetary")))
     def quintile(metric: String): DataFrame = {
       val byVal = users.groupBy(col(metric).as("v")).agg(count(lit(1)).as("k"))
       graft.ops.Relational.shardedCumSum(byVal, "v", Seq("k"), ascending = true)
@@ -1216,8 +1215,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
       p.crossJoin(broadcast(mid))
         .groupBy(col("user_id"))
         .agg(sum(when(col("day") < col("mid"), col("cents")).otherwise(0L)).as("v1"),
-          sum(when(col("day") >= col("mid"), col("cents")).otherwise(0L)).as("v2")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+          sum(when(col("day") >= col("mid"), col("cents")).otherwise(0L)).as("v2")))
     val n = users.agg(count(lit(1)).as("n"))
     def quintile(metric: String): DataFrame = {
       val byVal = users.groupBy(col(metric).as("v")).agg(count(lit(1)).as("k"))
@@ -1329,8 +1327,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
         .select(col("event_type"), expr("user_id DIV 32").as("chunk"),
           expr("shiftleft(1L, CAST(user_id % 32 AS INT))").as("bit"))
         .groupBy(col("event_type"), col("chunk"))
-        .agg(expr("bit_or(bit)").as("lanes")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+        .agg(expr("bit_or(bit)").as("lanes")))
     val sizes = lanes.groupBy(col("event_type"))
       .agg(sum(expr("bit_count(lanes)")).as("n_users"))
     val a = lanes.select(col("event_type").as("type_a"), col("chunk"),

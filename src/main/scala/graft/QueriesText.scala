@@ -239,15 +239,9 @@ private[graft] trait QueriesText { this: Queries.type =>
     * ([[graft.functions.Dedup.connectedComponents]]), cluster = min doc_id
     * of the component. DuckDB verifies with a recursive-CTE transitive
     * closure over the same pairs.
-    *
-    * `spark.graft.checkpoint.dir` (session conf) switches the iteration's
-    * lineage cuts from executor-local checkpoints to reliable ones against
-    * that directory — the cluster-mode setting (survives executor loss);
-    * unset = local-mode fast path.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    Dedup.connectedComponents(minhashPairs(spark, dir),
-        checkpointDir = spark.conf.getOption("spark.graft.checkpoint.dir"))
+    Dedup.connectedComponents(minhashPairs(spark, dir))
       .orderBy(col("id"))
 
 
@@ -448,8 +442,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def clusterSurvivorship(spark: SparkSession, dir: String): DataFrame =
     Dedup.clusterQualityKeepers(
-        Dedup.connectedComponents(minhashPairs(spark, dir),
-          checkpointDir = spark.conf.getOption("spark.graft.checkpoint.dir")),
+        Dedup.connectedComponents(minhashPairs(spark, dir)),
         t(spark, dir, "documents"), col("doc_id"), col("n_chars").cast("long"))
       .orderBy(col("cluster"))
 
@@ -641,7 +634,6 @@ private[graft] trait QueriesText { this: Queries.type =>
     */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir, "documents")
-    val ckpt = spark.conf.getOption("spark.graft.checkpoint.dir")
     val bkt = Sampling.hashBucket(col("doc_id"), 100)
     val gopherOk = Text.gopherFlags(col("text")).map(_._2).reduce(_ * _) === 1L
     // r21 (ONE text pass — r20 verdict task 1): the old funnel ran a
@@ -678,7 +670,7 @@ private[graft] trait QueriesText { this: Queries.type =>
       enriched.withColumn("is_k1",
         row_number().over(
           Window.partitionBy(col("fp")).orderBy(col("doc_id"))) === 1)
-        .drop("fp"), ckpt)
+        .drop("fp"))
     val k3cond = col("is_k1") && col("gopher_ok") && col("bkt") < 80
     // Decontamination over the PRECOMPUTED gram arrays (both sides read
     // the flags cut — no second text pass). The id list has exactly ONE
@@ -920,8 +912,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // round-trips cost. Falsified, reverted; the win that survived is
     // inside pageRankInt: its loop invariants are seamed once.)
     graft.functions.Graph.pageRankInt(edges, col("src"), col("dst"),
-        col("w"), iterations = 8,
-        checkpointDir = spark.conf.getOption("spark.graft.checkpoint.dir"))
+        col("w"), iterations = 8)
       .select(col("host"), col("rank").as("authority"))
       .orderBy(col("authority").desc, col("host"))
   }
@@ -1025,9 +1016,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // 5.2 s + 2.1 s accumulated); the cut's job happens-before every
     // consumer, so scoring runs exactly once at any scale.
     Sampling.quantileBins(
-        Materialize.cut(
-          classifierScored(spark, dir).drop("pred"),
-          spark.conf.getOption("spark.graft.checkpoint.dir")),
+        Materialize.cut(classifierScored(spark, dir).drop("pred")),
         lit("all"), col("score"), col("doc_id"), n = 10)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1446,8 +1435,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     val binned = Sampling.quantileBins(
       t(spark, dir, "documents").select(col("lang"), col("n_chars"), col("doc_id")),
       col("lang"), col("n_chars"), col("doc_id"), n = 10)
-    val cc = Dedup.connectedComponents(minhashPairs(spark, dir),
-      checkpointDir = spark.conf.getOption("spark.graft.checkpoint.dir"))
+    val cc = Dedup.connectedComponents(minhashPairs(spark, dir))
     val dups = cc.filter(col("id") =!= col("cluster"))
       .select(col("id").as("doc_id"), lit(1L).as("is_dup"))
     binned.join(dups, Seq("doc_id"), "left")
@@ -1669,8 +1657,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // classifierScored trains and scores; the histogram and its bounds
     // both scan it, so cut the narrow (score, label) frame once.
     val scored = Materialize.cut(
-      classifierScored(spark, dir).select(col("score"), col("is_spam")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+      classifierScored(spark, dir).select(col("score"), col("is_spam")))
     val bounds = scored.agg(min(col("score")).as("__lo"),
       max(col("score")).as("__hi"))
     val hist = scored.crossJoin(broadcast(bounds))
@@ -2029,8 +2016,7 @@ private[graft] trait QueriesText { this: Queries.type =>
       .select(col("doc_id"), col("lang"),
         size(Text.tokens(Text.normalized(col("text")))).cast("long").as("tok"))
       .join(scored, "doc_id")
-      .withColumn("shard", expr("mean_micro DIV 62500")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+      .withColumn("shard", expr("mean_micro DIV 62500")))
     val budget = base.agg(sum(col("tok")).as("tt"))
       .select(expr("tt DIV 2").as("budget"))
     val shardPrefix = base.groupBy(col("shard")).agg(sum(col("tok")).as("stok"))
@@ -2168,10 +2154,9 @@ private[graft] trait QueriesText { this: Queries.type =>
     * in-plan as 1-row aggregates.
     */
   def dupCoreStrength(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = spark.conf.getOption("spark.graft.checkpoint.dir")
     // one LSH pipeline feeds BOTH peels: cut the candidate list once, or
     // each kCore call re-derives shingles→minhash→bands
-    val pairs = Materialize.cut(minhashPairs(spark, dir), ckpt)
+    val pairs = Materialize.cut(minhashPairs(spark, dir))
     // r21: the k=2 and k=3 peels are INDEPENDENT driver-sequential loops
     // over the one cut pair list — the q199 two-CC-runs shape, so they get
     // the same guide-§2.6 treatment: two driver threads, each peel's round
@@ -2179,8 +2164,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // idle. The shared `pairs` cut is read-only to both.
     val ks = Seq(2, 3)
     val cores = ks.zip(Overlap.all(spark)(ks.map(k => () =>
-      graft.functions.Graph.kCore(pairs, col("id_a"), col("id_b"),
-        k, checkpointDir = ckpt)): _*))
+      graft.functions.Graph.kCore(pairs, col("id_a"), col("id_b"), k)): _*))
     cores.map { case (k, core) =>
       val nodes = core.select(col("a").as("id"))
         .unionAll(core.select(col("b").as("id"))).distinct()
@@ -2236,8 +2220,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // (lang, length) pairs feed the population counts, the first median,
     // and the deviation pass: cut the two-long projection once
     val d = Materialize.cut(
-      t(spark, dir, "documents").select(col("lang"), col("n_chars").as("v")),
-      spark.conf.getOption("spark.graft.checkpoint.dir"))
+      t(spark, dir, "documents").select(col("lang"), col("n_chars").as("v")))
     val n = d.groupBy(col("lang")).agg(count(lit(1)).as("n"))
     def medianOf(df: DataFrame, valueCol: String): DataFrame = {
       val byVal = df.groupBy(col("lang"), col(valueCol).as("v"))
@@ -2324,8 +2307,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // of the 6.5 s wall at sf0.1). The thin above caps this relation at
     // ~8192 docs BY CONSTRUCTION, so the cut is bounded at every scale —
     // exactly the stage-boundary discipline q85 uses.
-    Dedup.ppjoin(Materialize.cut(sets,
-        spark.conf.getOption("spark.graft.checkpoint.dir")), 13, 20)
+    Dedup.ppjoin(Materialize.cut(sets), 13, 20)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -2343,7 +2325,6 @@ private[graft] trait QueriesText { this: Queries.type =>
     * through the join, never via collect.
     */
   def releaseMergeAudit(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = spark.conf.getOption("spark.graft.checkpoint.dir")
     val d = t(spark, dir, "documents")
       .filter(size(Text.shingles(col("text"), 3)) > 0)
     val cut = d.agg(expr("(min(doc_id) + max(doc_id) + 1L) DIV 2").as("mid"))
@@ -2351,15 +2332,14 @@ private[graft] trait QueriesText { this: Queries.type =>
     def cc(docs: DataFrame): DataFrame =
       Dedup.connectedComponents(
         Dedup.minHashCandidates(docs, col("doc_id"), col("text"),
-          shingleK = 3, bands = 2, rowsPerBand = 2),
-        checkpointDir = ckpt)
+          shingleK = 3, bands = 2, rowsPerBand = 2))
     // r21: the two CC runs are INDEPENDENT until the label join, and each
     // is a driver-sequential loop of small lineage-cut jobs — running them
     // from two driver threads (guide §2.6) lets one run's round jobs
     // back-fill the cores the other's driver round-trips leave idle (at
     // sf0.1 neither saturates the box; on a cluster 2 jobs in flight is
-    // the guide's sweet spot). Both pass the same checkpoint dir, so there
-    // is no shared state.
+    // the guide's sweet spot). Both cut under the one session's checkpoint
+    // dir, so there is no shared state to race on.
     val Seq(before, after) = Overlap.all(spark)(
       () => cc(dOld).withColumnRenamed("cluster", "c_before"),
       () => cc(d).withColumnRenamed("cluster", "c_after"))
@@ -2368,8 +2348,7 @@ private[graft] trait QueriesText { this: Queries.type =>
     // distinct aggregates (q36's no-Expand discipline) over the
     // cut join; docs first clustered only AFTER the release are
     // intentionally out of scope (they are new structure, not merges).
-    val joined = Materialize.cut(
-      before.join(after, "id"), ckpt)
+    val joined = Materialize.cut(before.join(after, "id"))
     joined.agg(count(lit(1)).as("n_old_clustered_docs"))
       .crossJoin(joined.select(col("c_before")).distinct()
         .agg(count(lit(1)).as("n_clusters_before")))

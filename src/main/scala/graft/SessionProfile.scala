@@ -27,10 +27,10 @@ object SessionProfile {
     *  - `nanosAsLong`: events.parquet may carry TIMESTAMP(NANOS), which
     *    Spark has no type for; it reads as epoch-nano longs (queries do
     *    integer `ts div n`).
-    *  - With `checkpointDir`, iterative operators (q60's connected
-    *    components and the other seam loops) cut lineage with reliable
-    *    checkpoints there, the configuration a cluster runs, and the
-    *    ContextCleaner deletes them once their frames are unreachable.
+    *  - With `checkpointDir`, every [[graft.ops.Materialize.cut]] on the
+    *    session is a reliable checkpoint there, the configuration a
+    *    cluster runs, and the ContextCleaner deletes them once their
+    *    frames are unreachable.
     */
   def conf(cores: String, shufflePartitions: String,
            checkpointDir: Option[String] = None): Seq[(String, String)] =

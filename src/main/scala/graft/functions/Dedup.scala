@@ -220,33 +220,19 @@ object Dedup {
     * set. This is the step that turns pairwise candidates into one-keeper-
     * per-group semantics at scale without collecting edges to the driver.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-                          checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsIterated(pairs, maxIter, checkpointDir)._1
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame =
+    connectedComponentsIterated(pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the number of label-propagation rounds
     * actually run — near-dup clusters are shallow, so convergence typically
     * lands well before `maxIter` and the count is the spec's early-exit
     * assertion.
     *
-    * Checkpoint strategy: iterative label propagation MUST truncate lineage
-    * each round (the plan otherwise doubles per iteration), but HOW matters
-    * at scale. `localCheckpoint` stores blocks only on executors — fast, and
-    * fine in local mode, but on a real cluster one lost executor makes the
-    * truncated lineage unrecoverable and kills the whole job mid-iteration.
-    * Passing `checkpointDir` switches every cut to a reliable
-    * `checkpoint()` against that (HDFS/object-store) directory, which is the
-    * cluster-mode configuration; `None` keeps the local-mode fast path.
-    *
-    * Every cut is a [[graft.ops.Materialize.cut]] (see its note on the
-    * session-global checkpoint dir). Per-iteration checkpoint files are
-    * not cleaned up here; set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (as
-    * [[graft.Bench]] does) to have the ContextCleaner remove them as the
-    * checkpointed frames are GC'd, or clean the directory after the job.
+    * Label propagation MUST truncate lineage each round (the plan
+    * otherwise doubles per iteration); every cut is a
+    * [[graft.ops.Materialize.cut]], whose session decides its kind.
     */
-  def connectedComponentsIterated(pairs: DataFrame, maxIter: Int = 10,
-                                  checkpointDir: Option[String] = None): (DataFrame, Int) = {
+  def connectedComponentsIterated(pairs: DataFrame, maxIter: Int = 10): (DataFrame, Int) = {
     // Cuts: the loop-invariant edge list and every round are checkpoint
     // cuts; a round's `cutCounted` observe returns the changed-label count
     // from the cut's own job — one job per round, no separate convergence
@@ -266,7 +252,7 @@ object Dedup {
     // variant serialized the derivation into one pipeline and measured
     // 2.4→3.1 s SLOWER — falsified and reverted.)
     val edges = Materialize.cut(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))), checkpointDir)
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Round 1 is SPECIALIZED: under the identity seed (label(id) = id) the
     // generic step `least(label, min over neighbors of label(dst))`
     // simplifies to `least(src, min(dst))` — one aggregate over the
@@ -299,7 +285,7 @@ object Dedup {
               least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"))
         }
       val (updated, moved) = Materialize.cutCounted(stepped,
-        count(when(col("cluster") =!= col("__old"), lit(1))), checkpointDir)
+        count(when(col("cluster") =!= col("__old"), lit(1))))
       labels = updated.select(col("id"), col("cluster"))
       changed = moved
       converged = changed == 0

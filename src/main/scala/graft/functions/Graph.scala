@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   * engine-portable: float PageRank sums are partition-order-dependent and
   * would fall out of the differential oracle (the q61 HLL lesson).
   *
-  * Fixed-point update with ranks scaled to `scale` (default 1e9):
+  * Fixed-point update with ranks scaled to `Scale` (1e9) and damping
+  * `DampingPct` (85, the classic 0.85):
   * {{{
-  *   base      = scale DIV n_hosts
+  *   base      = Scale DIV n_hosts
   *   out_u     = Σ_v w(u,v)
   *   inflow(v) = Σ_u (r_t(u) * w(u,v)) DIV out_u
-  *   r_{t+1}(v)= ((100 - dampingPct) * base + dampingPct * inflow(v)) DIV 100
+  *   r_{t+1}(v)= ((100 - DampingPct) * base + DampingPct * inflow(v)) DIV 100
   * }}}
   * Every op is BIGINT mul/div/sum — bit-identical on any engine. The DIV
   * truncation loses < 1 unit per edge per iteration, invisible at scale
@@ -35,39 +36,36 @@ import org.apache.spark.sql.functions._
   * out-weight `out_u`, and `n_hosts` is the observed row count of the
   * cut host list, so `base` enters every round as a literal. A round's
   * one group-by also reads a zero contribution per host, which keeps
-  * hosts without inflow in the state at `(100 - dampingPct) * base DIV
+  * hosts without inflow in the state at `(100 - DampingPct) * base DIV
   * 100` without a join. Iteration count is fixed (default 8 — power
   * iteration converges geometrically at damping 0.85). Each round's
-  * state is lineage-CUT (localCheckpoint, or a reliable `checkpoint()`
-  * when `checkpointDir` is set — the cluster-mode configuration), the
-  * same discipline and cut as [[Dedup.connectedComponentsIterated]]:
+  * state is lineage-CUT by [[graft.ops.Materialize.cut]], the same
+  * discipline as [[Dedup.connectedComponentsIterated]]:
   * without the cut, Catalyst re-analyzes a plan that grows by one
   * join+agg per round and iteration time goes quadratic.
   */
 object Graph {
 
+  private val DampingPct = 85
+  private val Scale = 1000000000L
+
   /** Weighted integer PageRank. `edges` must be pre-aggregated
     * (src, dst, weight) with src ≠ dst; returns (host, rank) for every
-    * host appearing as a source or destination, rank scaled to `scale`.
+    * host appearing as a source or destination, rank scaled to `Scale`.
     */
   def pageRankInt(edges: DataFrame, src: Column, dst: Column,
-                  weight: Column, iterations: Int = 8,
-                  dampingPct: Int = 85,
-                  scale: Long = 1000000000L,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
+                  weight: Column, iterations: Int = 8): DataFrame = {
+    require(iterations >= 1)
     // Cut the (usually derived) edge list once, each row carrying its
     // source's out-weight: every round references it, and cutting here
     // caps the per-round plan at one join + one aggregate.
     val e = Materialize.cut(edges.select(src.as("src"), dst.as("dst"),
         weight.cast("long").as("w"))
-      .withColumn("ow", sum(col("w")).over(Window.partitionBy(col("src")))),
-      checkpointDir)
+      .withColumn("ow", sum(col("w")).over(Window.partitionBy(col("src")))))
     val (hosts, nHosts) = Materialize.cutCounted(e.select(col("src").as("host"))
-      .union(e.select(col("dst").as("host"))).distinct(), count(lit(1)),
-      checkpointDir)
-    // Same truncating double division as `CAST(scale / n_hosts AS BIGINT)`.
-    val base = if (nHosts == 0) 0L else (scale.toDouble / nHosts).toLong
+      .union(e.select(col("dst").as("host"))).distinct(), count(lit(1)))
+    // The oracle's truncating `CAST(1000000000 / n_hosts AS BIGINT)`.
+    val base = if (nHosts == 0) 0L else (Scale.toDouble / nHosts).toLong
     val noInflow = hosts.select(col("host"), lit(0L).as("contrib"))
     var r = hosts.select(col("host"), lit(base).as("rank"))
     for (i <- 1 to iterations) {
@@ -76,11 +74,11 @@ object Graph {
         .union(noInflow)
         .groupBy(col("host")).agg(sum(col("contrib")).as("inflow"))
         .select(col("host"),
-          expr(s"((100 - $dampingPct) * ${base}L + $dampingPct * inflow) DIV 100").as("rank"))
+          expr(s"((100 - $DampingPct) * ${base}L + $DampingPct * inflow) DIV 100").as("rank"))
       // Cut every 2 rounds and after the last: a two-round uncut chain
       // costs Catalyst nothing, and fewer cuts mean less checkpoint I/O —
       // the dominant per-round cost.
-      if (i % 2 == 0 || i == iterations) r = Materialize.cut(r, checkpointDir)
+      if (i % 2 == 0 || i == iterations) r = Materialize.cut(r)
     }
     r
   }
@@ -166,8 +164,7 @@ object Graph {
     * Returns the surviving undirected edges (a, b).
     */
   def kCore(pairs: DataFrame, a: Column, b: Column, k: Int,
-            maxRounds: Int = 64,
-            checkpointDir: Option[String] = None): DataFrame = {
+            maxRounds: Int = 64): DataFrame = {
     require(k >= 1 && maxRounds >= 1)
     // Every round is a checkpoint cut ([[Materialize.cutCounted]]) whose
     // edge count rides the checkpoint job via observe instead of being its
@@ -176,7 +173,7 @@ object Graph {
     // cheap lineage too.
     var (edges, prevCount) = Materialize.cutCounted(
       pairs.select(least(a, b).as("a"), greatest(a, b).as("b"))
-        .filter(col("a") =!= col("b")).distinct(), count(lit(1)), checkpointDir)
+        .filter(col("a") =!= col("b")).distinct(), count(lit(1)))
     var i = 0
     var peeled = 0L
     var stable = prevCount == 0
@@ -188,7 +185,7 @@ object Graph {
       val (nextEdges, after) = Materialize.cutCounted(edges
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")), count(lit(1)), checkpointDir)
+        .select(col("a"), col("b")), count(lit(1)))
       edges = nextEdges
       stable = after == prevCount
       peeled = prevCount - after

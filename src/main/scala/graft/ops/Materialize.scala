@@ -5,12 +5,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 /** The engine's one stage cut: compute a frame once, truncate its
   * lineage, let N consumers (or the next loop round) read it.
   *
-  * One eager checkpoint, one job: a reliable `checkpoint(eager = true)`
-  * under `checkpointDir` (the cluster configuration), `localCheckpoint`
-  * otherwise. Either kind evaluates each row once in a single Spark job
+  * One eager checkpoint, one job, whose kind the frame's own session
+  * decides (not the active one, so a cut on an [[Overlap.all]] pool
+  * thread or in a sibling session keeps its session's kind): with
+  * `spark.graft.checkpoint.dir` set ([[graft.SessionProfile]]'s
+  * `checkpointDir`, the cluster configuration) a reliable
+  * `checkpoint(eager = true)` under that dir, which survives a lost
+  * executor; without it a `localCheckpoint`, the local-mode fast path.
+  * Either kind evaluates each row once in a single Spark job
   * (MaterializeSpec), and the files belong to the ContextCleaner
-  * (`spark.cleaner.referenceTracking.cleanCheckpoints`, which
-  * [[graft.SessionProfile]] sets with the dir).
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints`, which the profile
+  * sets with the dir); [[graft.SessionProfile.stop]] deletes the
+  * `<context-uuid>` tree the cleaner leaves behind.
   *
   * A cut is NOT free — the q182/q149 lesson: when every consumer takes
   * the SAME shuffle of the shared frame, runtime exchange reuse already
@@ -21,15 +27,16 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Materialize {
 
-  /** Cut `df`: eager checkpoint under `checkpointDir`, local otherwise.
+  /** Cut `df`: eager checkpoint under the session's checkpoint dir, local
+    * when it has none.
     *
-    * `setCheckpointDir` is session-global state, so it is only called when
+    * `setCheckpointDir` is context-global state, so it is only called when
     * the context has no checkpoint dir or points elsewhere: same-dir
-    * concurrent callers don't race; callers passing DIFFERENT dirs still
+    * concurrent callers don't race; sessions with DIFFERENT dirs still
     * contend (last set wins; both stay correct, files land in one dir).
     */
-  def cut(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
+  def cut(df: DataFrame): DataFrame =
+    df.sparkSession.conf.getOption("spark.graft.checkpoint.dir") match {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
         if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
@@ -41,10 +48,9 @@ object Materialize {
     * `observe`, so a loop's convergence count costs no job of its own.
     * `metric` must be a LONG aggregate over the frame.
     */
-  def cutCounted(df: DataFrame, metric: Column,
-                 checkpointDir: Option[String]): (DataFrame, Long) = {
+  def cutCounted(df: DataFrame, metric: Column): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
-    val out = cut(df.observe(obs, metric.as("m")), checkpointDir)
+    val out = cut(df.observe(obs, metric.as("m")))
     (out, obs.get("m").asInstanceOf[Long])
   }
 }

@@ -33,7 +33,6 @@ object IncrementalRead {
   def setWindow(path: String, column: String, lo: Long, hi: Long): Unit =
     registry.put(normalize(path), RunWindow(column, lo, hi))
 
-  def clearWindow(path: String): Unit = registry.remove(normalize(path))
   def clearAll(): Unit = registry.clear()
 
   private[plans] def windowFor(paths: Seq[String]): Option[RunWindow] =

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.model.OffsetRange
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -68,14 +67,9 @@ final class OffsetLedgerListener extends StreamingQueryListener {
   def stateSnapshots: Seq[StateSnapshot] = synchronized(states.toSeq)
 
   /** The reference's BATCH_DURATION expectation check
-    * (`KafkaDemo.sh:131-144`): every recorded batch within tolerance.
-    */
-  def durationsWithin(maxMs: Long): Boolean =
-    synchronized(durations.forall(_._2 <= maxMs))
-
-  /** The same expectation as a PASS/FAIL audit row, ready for a
-    * *_TEST_LOG-style append alongside the other
-    * [[graft.dq.Checks]] results (`KafkaDemo.sh:131-144`).
+    * (`KafkaDemo.sh:131-144`) as a PASS/FAIL audit row, every recorded
+    * batch within `maxMs`, ready for a *_TEST_LOG-style append alongside
+    * the other [[graft.dq.Checks]] results.
     */
   def durationAudit(maxMs: Long, sourceName: String): graft.model.ValidationResult =
     graft.dq.Checks.batchDurationCheck(batchDurations, maxMs, sourceName)
@@ -109,15 +103,6 @@ final class OffsetLedgerListener extends StreamingQueryListener {
       }
     }.toMap
   }
-}
-
-object OffsetLedger {
-  /** Expected record count for a run window: sum(until - from)
-    * (`KafkaDemo.sh:202-214`).
-    */
-  def expectedCount(ledger: DataFrame): Long =
-    ledger.agg(coalesce(sum(col("untilOffset") - col("fromOffset")), lit(0L)))
-      .head().getLong(0)
 }
 
 /** One stateful operator's footprint in one micro-batch, as reported by

@@ -227,15 +227,17 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connectedComponents reliable-checkpoint path (cluster mode) gives identical labels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-    // the reliable strategy actually wrote checkpoint files
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, "no reliable checkpoint files written")
+    SpecIo.withTempDir("graft-ckpt") { dir =>
+      val pairs = TestSpark.reliableCuts(dir).createDataFrame(
+        Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L))).toDF("id_a", "id_b")
+      val cc = Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
+      // the reliable strategy actually wrote checkpoint files
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, "no reliable checkpoint files written")
+    }
   }
   test("clusterQualityKeepers keeps one best member per connected component") {
     // component {1,2,3,9} (via 1-2, 2-3, 9-3) and component {5,6}; the

@@ -72,15 +72,17 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("kCore reliable-checkpoint path (cluster mode) matches local and writes files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kcore-ckpt").toString
-    val tailed = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L), (10L, 11L))
-    val viaReliable = Graph.kCore(tailed.toDF("a", "b"), col("a"), col("b"),
-        k = 2, checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaReliable == core(tailed, 2))
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, "no reliable checkpoint files written")
+    SpecIo.withTempDir("graft-kcore-ckpt") { dir =>
+      val tailed = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L), (10L, 11L))
+      val viaReliable = Graph.kCore(
+          TestSpark.reliableCuts(dir).createDataFrame(tailed).toDF("a", "b"),
+          col("a"), col("b"), k = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(viaReliable == core(tailed, 2))
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, "no reliable checkpoint files written")
+    }
   }
 
   test("kCore peels known graphs: paths vanish, cycles survive k=2, cliques survive k=3") {

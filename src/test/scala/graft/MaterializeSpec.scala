@@ -29,7 +29,11 @@ class MaterializeSpec extends AnyFunSuite {
   }
 
   // 1000 ids over 4 partitions, every 7th one dropped: 857 rows survive.
-  private def frame = spark.range(0, 1000, 1, 4).filter(col("id") % 7 =!= 0).toDF()
+  // The frame's session picks the cut's kind: the shared one cuts locally,
+  // a `reliableCuts` sibling under `dir`.
+  private def frame(reliable: Boolean, dir: String) =
+    (if (reliable) TestSpark.reliableCuts(dir) else spark)
+      .range(0, 1000, 1, 4).filter(col("id") % 7 =!= 0).toDF()
   private val expected = (0 until 1000).count(_ % 7 != 0).toLong
 
   for ((kind, reliable) <- Seq("local" -> false, "reliable" -> true)) {
@@ -38,8 +42,7 @@ class MaterializeSpec extends AnyFunSuite {
         val evals = spark.sparkContext.longAccumulator(s"cut-evals-$kind")
         val touch = udf { (id: Long) => evals.add(1); id }
         val ((cut, n), jobs) = jobsOf {
-          val c = Materialize.cut(frame.select(touch(col("id")).as("id")),
-            if (reliable) Some(dir) else None)
+          val c = Materialize.cut(frame(reliable, dir).select(touch(col("id")).as("id")))
           (c, evals.value.longValue)
         }
         assert(jobs == 1, s"jobs=$jobs")
@@ -51,8 +54,8 @@ class MaterializeSpec extends AnyFunSuite {
 
     test(s"cutCounted observes its metric on the $kind checkpoint job") {
       SpecIo.withTempDir("cut") { dir =>
-        val ((cut, n), jobs) = jobsOf(Materialize.cutCounted(frame, count(lit(1)),
-          if (reliable) Some(dir) else None))
+        val ((cut, n), jobs) =
+          jobsOf(Materialize.cutCounted(frame(reliable, dir), count(lit(1))))
         assert(n == expected)
         assert(jobs == 1, s"jobs=$jobs")
         assert(cut.count() == expected)

@@ -157,14 +157,13 @@ class QueriesSpec extends AnyFunSuite {
         SparkEntry.queries(q)(s, sf).collect().map(_.toString).sorted.toSeq)
     val local = spark.newSession()
     local.conf.unset("spark.graft.checkpoint.dir")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-cut-ckpt")
-    val reliable = spark.newSession()
-    reliable.conf.set("spark.graft.checkpoint.dir", ckptDir.toString)
-    assert(rows(reliable) == rows(local), "cut kinds disagree")
-    // the reliable cuts actually landed in the checkpoint directory
-    def treeSize(p: java.io.File): Long =
-      if (p.isDirectory) p.listFiles().map(treeSize).sum else p.length()
-    assert(treeSize(ckptDir.toFile) > 0L, "checkpoint dir never written")
+    SpecIo.withTempDir("graft-cut-ckpt") { ckptDir =>
+      assert(rows(TestSpark.reliableCuts(ckptDir)) == rows(local), "cut kinds disagree")
+      // the reliable cuts actually landed in the checkpoint directory
+      def treeSize(p: java.io.File): Long =
+        if (p.isDirectory) p.listFiles().map(treeSize).sum else p.length()
+      assert(treeSize(new java.io.File(ckptDir)) > 0L, "checkpoint dir never written")
+    }
   }
 
   test("q124 diversity: distinct ≤ doc-distinct ≤ total grams, groups cover the corpus") {

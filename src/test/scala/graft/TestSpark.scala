@@ -27,6 +27,17 @@ object TestSpark {
     SparkSession.setActiveSession(plain)
     s
   }
+
+  /** A sibling session over the shared context whose stage cuts are
+    * reliable checkpoints under `dir`: a cut's kind comes from its frame's
+    * session, so frames built on this one cut there while [[spark]] keeps
+    * cutting locally.
+    */
+  def reliableCuts(dir: String): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.checkpoint.dir", dir)
+    s
+  }
 }
 
 /** Kafka-shaped test record (top-level: inner case classes break encoder

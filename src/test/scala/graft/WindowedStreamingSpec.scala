@@ -572,7 +572,6 @@ class WindowedStreamingSpec extends AnyFunSuite {
       var tries = 0
       while (listener.batchDurations.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
       assert(listener.batchDurations.nonEmpty)
-      assert(listener.durationsWithin(maxMs = 600000L))
       // Audit-row form: generous budget passes; a zero budget makes every
       // recorded batch over-budget and must produce a FAILED row.
       val ok = listener.durationAudit(maxMs = 600000L, sourceName = "events")
