@@ -1,26 +1,25 @@
 package graft
 
+import graft.functions.Sketches
 import graft.plans.{CharShingles, DotProduct, HyperplaneSignature, L2Distance, MinHashes, Shingles, SimHash32Md5, SimHash64}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftBridge, SparkSessionExtensions, functions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SQL registration of the engine's custom Catalyst expressions, so the
+/** SQL functions over the engine's custom Catalyst expressions, so the
   * stored-query-as-data path (the reference keeps every query in config
-  * tables — `TESTING_QUERIES` CLOBs) can call them from SQL text:
+  * tables — `TESTING_QUERIES` CLOBs) can call them from SQL text. Every
+  * profile session injects them through [[GraftExtensions]]:
   *
   * {{{
-  * // at session build time (before the SparkContext starts):
-  * --conf spark.sql.extensions=graft.GraftExtensions
-  * // or on an existing session:
-  * GraftFunctions.register(spark)
   * spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")
   * }}}
   *
   * Functions: dot_product(a, b) · l2_distance(a, b) ·
   * min_hashes(shingles, n) · shingles(tokens, k) · char_shingles(text, k) ·
   * sim_hash64(tokens) · sim_hash32_md5(tokens) ·
-  * hyperplane_signature(vec, dim, bits[, seed]).
+  * hyperplane_signature(vec, dim, bits[, seed]) · graft_kmv(hash48) ·
+  * graft_kmv_estimate(sketch).
   */
 object GraftFunctions {
 
@@ -31,50 +30,52 @@ object GraftFunctions {
       s"$fn expects a literal integer argument, got $other")
   }
 
+  /** `name`'s builder, failing on an argument count outside `arity`. */
+  private def fn(name: String, arity: Int*)(build: Seq[Expression] => Expression)
+      : (String, Seq[Expression] => Expression) =
+    name -> { args =>
+      if (!arity.contains(args.length)) throw new IllegalArgumentException(
+        s"$name expects ${arity.mkString(" or ")} arguments, got ${args.length}")
+      build(args)
+    }
+
+  /** A one-argument Column-API function as an expression builder. */
+  private def viaColumn(f: Column => Column): Seq[Expression] => Expression =
+    args => GraftBridge.toCatalyst(f(GraftBridge.toColumn(args.head)))
+
+  // Same integer math as Sketches.kmvEstimate's CASE expression, over a
+  // k-sized array — exact below k, (k-1)·2^48 DIV kth-min otherwise.
+  private val kmvEstimate = functions.udf((sketch: Seq[Long]) => {
+    val k = Sketches.DefaultK
+    if (sketch == null) 0L
+    else if (sketch.length < k) sketch.length.toLong
+    else ((k - 1).toLong * (1L << 48)) / math.max(sketch(k - 1), 1L)
+  })
+
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "dot_product" -> ((args: Seq[Expression]) => DotProduct(args(0), args(1))),
-    "l2_distance" -> ((args: Seq[Expression]) => L2Distance(args(0), args(1))),
-    "char_shingles" -> ((args: Seq[Expression]) =>
+    fn("dot_product", 2)(args => DotProduct(args(0), args(1))),
+    fn("l2_distance", 2)(args => L2Distance(args(0), args(1))),
+    fn("char_shingles", 2)(args =>
       CharShingles(args(0), intArg(args(1), "char_shingles"))),
-    "min_hashes" -> ((args: Seq[Expression]) =>
+    fn("min_hashes", 2)(args =>
       MinHashes(args(0), intArg(args(1), "min_hashes"))),
-    "shingles" -> ((args: Seq[Expression]) =>
+    fn("shingles", 2)(args =>
       Shingles(args(0), intArg(args(1), "shingles"))),
-    "sim_hash64" -> ((args: Seq[Expression]) => SimHash64(args(0))),
-    "sim_hash32_md5" -> ((args: Seq[Expression]) => SimHash32Md5(args(0))),
-    "hyperplane_signature" -> ((args: Seq[Expression]) =>
+    fn("sim_hash64", 1)(args => SimHash64(args(0))),
+    fn("sim_hash32_md5", 1)(args => SimHash32Md5(args(0))),
+    fn("hyperplane_signature", 3, 4)(args =>
       HyperplaneSignature(args(0),
         intArg(args(1), "hyperplane_signature"),
         intArg(args(2), "hyperplane_signature"),
-        if (args.length > 3) intArg(args(3), "hyperplane_signature").toLong else 42L)))
-
-  /** Register on an already-built session (temp functions). Also exposes
-    * the mergeable KMV sketch aggregate as `graft_kmv(hash48)` /
-    * `graft_kmv_estimate(sketch)` so stored SQL text can build and read
-    * bottom-k distinct sketches (aggregates register through the UDF
-    * surface, not the expression registry — they are not Expressions).
-    */
-  def register(spark: SparkSession): Unit = {
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
-    }
-    spark.udf.register("graft_kmv",
-      org.apache.spark.sql.functions.udaf(
-        new graft.functions.Sketches.KmvAggregator(graft.functions.Sketches.DefaultK)))
-    // Same integer math as Sketches.kmvEstimate's CASE expression, over a
-    // k-sized array — exact below k, (k-1)·2^48 DIV kth-min otherwise.
-    spark.udf.register("graft_kmv_estimate", (sketch: Seq[Long]) => {
-      val k = graft.functions.Sketches.DefaultK
-      if (sketch == null) 0L
-      else if (sketch.length < k) sketch.length.toLong
-      else ((k - 1).toLong * (1L << 48)) / math.max(sketch(k - 1), 1L)
-    })
-  }
+        if (args.length > 3) intArg(args(3), "hyperplane_signature").toLong else 42L)),
+    // the mergeable bottom-k distinct sketch, built and read from SQL text
+    fn("graft_kmv", 1)(viaColumn(Sketches.kmvSketch(_))),
+    fn("graft_kmv_estimate", 1)(viaColumn(kmvEstimate(_))))
 }
 
-/** Session-builder injection variant of [[GraftFunctions]], plus the
-  * automatic incremental-read rule ([[graft.plans.IncrementalRead]]).
+/** Injects [[GraftFunctions]], the opt-in rank-filter rewrite
+  * ([[graft.plans.ShardedTopK]]) and the native per-key top-k operator
+  * ([[graft.plans.TopKPlan]]) into every session [[SessionProfile]] builds.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -82,7 +83,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.plans", name), b))
     }
-    ext.injectResolutionRule(_ => new graft.plans.IncrementalRead.InjectWatermark)
     ext.injectOptimizerRule(_ => new graft.plans.ShardedTopK.RewriteRankFilter)
     // Whole-operator extension: per-key top-k as a native heap-based
     // physical operator (hint → logical node → partial/final exec pair).

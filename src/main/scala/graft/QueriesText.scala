@@ -1450,16 +1450,13 @@ private[graft] trait QueriesText { this: Queries.type =>
   /** Zipf vocabulary table: the 20 most frequent tokens per language with
     * exact occurrence counts — the vocabulary audit behind stopword lists,
     * quality-signal calibration (q26 stopword ratios) and tokenizer-equity
-    * checks (q111). The per-language top-k routes through
-    * [[graft.ops.Relational.nativeTopK]]: under a [[graft.GraftExtensions]]
-    * session the cut is the native per-key bounded-heap operator
+    * checks (q111). The per-language top-k is
+    * [[graft.ops.Relational.nativeTopK]]'s per-key bounded-heap operator
     * ([[graft.plans.TopKPlan]], partial/final heaps — at most
-    * mapPartitions × langs × 20 survivors cross the exchange); a plain
-    * session falls back to [[graft.ops.Relational.groupTopK]]'s exact
-    * two-phase window. Either way the ~5-value language partition never
-    * funnels the full token-count table through one reducer, and the rank
-    * column is re-derived by a window over the ≤ langs×20 survivors —
-    * a bounded frame in both paths.
+    * mapPartitions × langs × 20 survivors cross the exchange), so the
+    * ~5-value language partition never funnels the full token-count table
+    * through one reducer, and the rank column is re-derived by a window
+    * over the ≤ langs×20 survivors.
     */
   def zipfTable(spark: SparkSession, dir: String): DataFrame = {
     val counts = t(spark, dir, "documents")
@@ -1742,13 +1739,10 @@ private[graft] trait QueriesText { this: Queries.type =>
     * [[graft.ops.Relational.nativeTopK]] — the catalog face of the native
     * per-key top-k PHYSICAL operator ([[graft.plans.TopKPlan]]: logical
     * node + planner strategy + heap-based partial/final exec pair,
-    * injected via [[graft.GraftExtensions]]). On an extension-bearing
-    * session the shuffle carries only per-partition heap survivors
-    * (≤ partitions × keys × k rows) instead of the corpus; on a plain
-    * session (the driver's Verify/Bench mains) the call transparently
-    * takes [[graft.ops.Relational.groupTopK]]'s two-phase window — the
-    * rows are identical by construction (both are `row_number() <= k`
-    * under the same total order), which is exactly what the oracle checks.
+    * injected via [[graft.GraftExtensions]]). The shuffle carries only
+    * per-partition heap survivors (≤ partitions × keys × k rows) instead
+    * of the corpus; the rows are `row_number() <= k` under a total order,
+    * which is exactly what the oracle checks.
     */
   def nativeTopKDocs(spark: SparkSession, dir: String): DataFrame =
     Relational.nativeTopK(

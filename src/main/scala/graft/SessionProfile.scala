@@ -20,6 +20,9 @@ object SessionProfile {
   def envShufflePartitions(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", default)
 
+  /** The static setting that injects [[GraftExtensions]] into a context. */
+  val extensions: (String, String) = "spark.sql.extensions" -> "graft.GraftExtensions"
+
   /** The profile's settings in the order they are applied.
     *
     *  - AQE starts from `shufflePartitions` and coalesces small stages back
@@ -27,6 +30,9 @@ object SessionProfile {
     *  - `nanosAsLong`: events.parquet may carry TIMESTAMP(NANOS), which
     *    Spark has no type for; it reads as epoch-nano longs (queries do
     *    integer `ts div n`).
+    *  - [[GraftExtensions]] is a static setting of the context, so every
+    *    session on it, `newSession()` siblings included, carries the native
+    *    top-k operator and the graft SQL functions.
     *  - With `checkpointDir`, every [[graft.ops.Materialize.cut]] on the
     *    session is a reliable checkpoint there, the configuration a
     *    cluster runs, and the ContextCleaner deletes them once their
@@ -41,7 +47,8 @@ object SessionProfile {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.adaptive.enabled" -> "true",
-      "spark.ui.enabled" -> "false") ++
+      "spark.ui.enabled" -> "false",
+      extensions) ++
       checkpointDir.toSeq.flatMap(dir => Seq(
         "spark.graft.checkpoint.dir" -> dir,
         "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))

@@ -61,41 +61,28 @@ object Relational {
   }
 
   /** Per-key top-k through the NATIVE physical operator
-    * ([[graft.plans.TopKPlan]]) when the session carries
-    * [[graft.GraftExtensions]], with a transparent fall-back to
-    * [[groupTopK]]'s two-phase window otherwise — identical rows either
-    * way (both are `row_number() <= k` under the same total order; `order`
-    * MUST be total, so include a tiebreak column).
+    * ([[graft.plans.TopKPlan]]) that every profile session carries via
+    * [[graft.GraftExtensions]]: the rows of `row_number() <= k` per key
+    * under `order`, which MUST be total (include a tiebreak column).
     *
     * The native plan replaces "shuffle every row, sort every partition"
     * with per-key bounded heaps: the exchange moves at most
-    * mapPartitions × keys × k survivors. The fall-back keeps plain
-    * sessions (the driver's Verify/Bench mains) on the already
-    * hot-reducer-free window form.
+    * mapPartitions × keys × k survivors.
     */
   def nativeTopK(df: DataFrame, keys: Seq[String],
                  order: Seq[(String, Boolean)], k: Int): DataFrame = {
-    // Empty keys/order would leave the hint unresolved on an extensions
-    // session — Spark DROPS unknown hints, which would silently return
-    // EVERY row instead of k. Fail fast; a global top-k is a different
-    // operator (TakeOrdered / orderBy.limit), not a per-key one.
+    // Spark DROPS a hint nothing resolves, which would silently return
+    // EVERY row instead of k: on empty keys/order (a global top-k is
+    // TakeOrdered / orderBy.limit) and on a session without the extension.
     require(keys.nonEmpty && order.nonEmpty,
       "nativeTopK needs non-empty keys and order (global top-k = orderBy.limit)")
-    // Gate on the injected planner strategy, not on analyzing a hinted
-    // plan: probing by analysis made plain sessions log a HintErrorLogger
-    // WARN per call. Strategy present ⇒ ResolveTopKHint is injected too
-    // (both come from GraftExtensions) and it always rewrites a hint with
-    // non-empty keys/order, so the hinted path never silently degrades.
-    val native = df.sparkSession.sessionState.planner.strategies
-      .exists(_.isInstanceOf[graft.plans.TopKPlan.Strategy])
-    if (native) {
-      val params: Seq[Any] = k +: (keys.map("key:" + _) ++
-        order.map { case (c, asc) => (if (asc) "asc:" else "desc:") + c })
-      df.hint("graft_topk", params: _*)
-    } else {
-      val oc = order.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
-      groupTopK(df, keys.map(col), oc, col(order.last._1), k).drop("rank")
-    }
+    val (setting, extensions) = graft.SessionProfile.extensions
+    require(df.sparkSession.sessionState.planner.strategies
+        .exists(_.isInstanceOf[graft.plans.TopKPlan.Strategy]),
+      s"nativeTopK needs a session built with $setting=$extensions")
+    val params: Seq[Any] = k +: (keys.map("key:" + _) ++
+      order.map { case (c, asc) => (if (asc) "asc:" else "desc:") + c })
+    df.hint("graft_topk", params: _*)
   }
 
   /** Watermark computation: NVL(MAX(runId),0) / NVL(MIN(runId),0) over the

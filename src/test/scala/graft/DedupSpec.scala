@@ -228,8 +228,8 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents reliable-checkpoint path (cluster mode) gives identical labels") {
     SpecIo.withTempDir("graft-ckpt") { dir =>
-      val pairs = TestSpark.reliableCuts(dir).createDataFrame(
-        Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L))).toDF("id_a", "id_b")
+      val pairs = TestSpark.sibling("spark.graft.checkpoint.dir" -> dir)
+        .createDataFrame(Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L))).toDF("id_a", "id_b")
       val cc = Dedup.connectedComponents(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))

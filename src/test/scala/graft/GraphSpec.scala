@@ -75,7 +75,8 @@ class GraphSpec extends AnyFunSuite {
     SpecIo.withTempDir("graft-kcore-ckpt") { dir =>
       val tailed = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L), (10L, 11L))
       val viaReliable = Graph.kCore(
-          TestSpark.reliableCuts(dir).createDataFrame(tailed).toDF("a", "b"),
+          TestSpark.sibling("spark.graft.checkpoint.dir" -> dir)
+            .createDataFrame(tailed).toDF("a", "b"),
           col("a"), col("b"), k = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(viaReliable == core(tailed, 2))

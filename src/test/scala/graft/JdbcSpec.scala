@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.model.{StageJob, ValidationResult, Watermark}
 import graft.pipeline.StageRunner
 import graft.sources.{Jdbc, Tables}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The JDBC layer adapter against in-JVM embedded Derby (the one database
@@ -22,11 +21,23 @@ class JdbcSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // Derby keeps the database open across the suite's tests, so its home
+  // lives as long as the suite: shut down, then deleted with the temp dir.
+  private var home: String = _
+
   private lazy val dbUrl: String = {
-    val home = Files.createTempDirectory("graft_derby").toString
     System.setProperty("derby.system.home", home)
     s"jdbc:derby:$home/graftdb;create=true"
   }
+
+  override def run(testName: Option[String], args: Args): Status =
+    SpecIo.withTempDir("graft_derby") { dir =>
+      home = dir
+      try super.run(testName, args)
+      finally
+        try java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/graftdb;shutdown=true")
+        catch { case _: java.sql.SQLException => } // a clean shutdown throws too
+    }
 
   private lazy val sampleWritten: Unit = {
     val df = Seq(
@@ -105,40 +116,41 @@ class JdbcSpec extends AnyFunSuite {
       dbUrl, "customer_tgt", SaveMode.Overwrite)
 
     // same logical tables on the parquet path
-    val pq = Files.createTempDirectory("graft_jdbc_pq").toString
-    spark.createDataFrame(Seq(
-      (1L, "alice", 10.5, 5L), (2L, "bob", 20.0, 6L),
-      (3L, "carol", 7.25, 6L), (4L, "dave", 1.0, 9L)))
-      .toDF("id", "name", "score", "update_job_run_id")
-      .write.parquet(s"$pq/src.parquet")
-    spark.createDataFrame(Seq(
-      (1L, "alice", 10.5, 5L), (2L, "bob", 20.0, 6L), (3L, "carol", 7.25, 6L)))
-      .toDF("id", "name", "score", "update_job_run_id")
-      .write.parquet(s"$pq/tgt.parquet")
+    SpecIo.withTempDir("graft_jdbc_pq") { pq =>
+      spark.createDataFrame(Seq(
+        (1L, "alice", 10.5, 5L), (2L, "bob", 20.0, 6L),
+        (3L, "carol", 7.25, 6L), (4L, "dave", 1.0, 9L)))
+        .toDF("id", "name", "score", "update_job_run_id")
+        .write.parquet(s"$pq/src.parquet")
+      spark.createDataFrame(Seq(
+        (1L, "alice", 10.5, 5L), (2L, "bob", 20.0, 6L), (3L, "carol", 7.25, 6L)))
+        .toDF("id", "name", "score", "update_job_run_id")
+        .write.parquet(s"$pq/tgt.parquet")
 
-    val job = StageJob(1, "stg_customer", "customer_tgt", "STAGING",
-      sourceQuery = "SELECT id, name, score FROM src_v " +
-        "WHERE update_job_run_id BETWEEN :min_run_id AND :max_run_id",
-      targetQuery = "SELECT id, name, score FROM tgt_v " +
-        "WHERE update_job_run_id BETWEEN :min_run_id AND :max_run_id",
-      nullQuery = Some("SELECT * FROM tgt_v WHERE id IS NULL OR name IS NULL"))
+      val job = StageJob(1, "stg_customer", "customer_tgt", "STAGING",
+        sourceQuery = "SELECT id, name, score FROM src_v " +
+          "WHERE update_job_run_id BETWEEN :min_run_id AND :max_run_id",
+        targetQuery = "SELECT id, name, score FROM tgt_v " +
+          "WHERE update_job_run_id BETWEEN :min_run_id AND :max_run_id",
+        nullQuery = Some("SELECT * FROM tgt_v WHERE id IS NULL OR name IS NULL"))
 
-    def runWith(srcV: org.apache.spark.sql.DataFrame,
-                tgtV: org.apache.spark.sql.DataFrame) = {
-      srcV.createOrReplaceTempView("src_v")
-      tgtV.createOrReplaceTempView("tgt_v")
-      StageRunner.runJob(spark, job, Watermark(5L, 6L)).results
-        .map(r => (r.sourceName, r.stage, r.testCase, r.stepName,
-          r.testResult, r.comments))
+      def runWith(srcV: org.apache.spark.sql.DataFrame,
+                  tgtV: org.apache.spark.sql.DataFrame) = {
+        srcV.createOrReplaceTempView("src_v")
+        tgtV.createOrReplaceTempView("tgt_v")
+        StageRunner.runJob(spark, job, Watermark(5L, 6L)).results
+          .map(r => (r.sourceName, r.stage, r.testCase, r.stepName,
+            r.testResult, r.comments))
+      }
+
+      val viaJdbc = runWith(Tables.load(spark, dbUrl, "customer_stg"),
+        Tables.load(spark, dbUrl, "customer_tgt"))
+      val viaParquet = runWith(spark.read.parquet(s"$pq/src.parquet"),
+        spark.read.parquet(s"$pq/tgt.parquet"))
+      assert(viaJdbc == viaParquet,
+        s"jdbc audit rows diverge from parquet:\n$viaJdbc\nvs\n$viaParquet")
+      assert(viaJdbc.forall(_._5 == ValidationResult.PASSED), viaJdbc.toString)
+      assert(viaJdbc.size == 5)
     }
-
-    val viaJdbc = runWith(Tables.load(spark, dbUrl, "customer_stg"),
-      Tables.load(spark, dbUrl, "customer_tgt"))
-    val viaParquet = runWith(spark.read.parquet(s"$pq/src.parquet"),
-      spark.read.parquet(s"$pq/tgt.parquet"))
-    assert(viaJdbc == viaParquet,
-      s"jdbc audit rows diverge from parquet:\n$viaJdbc\nvs\n$viaParquet")
-    assert(viaJdbc.forall(_._5 == ValidationResult.PASSED), viaJdbc.toString)
-    assert(viaJdbc.size == 5)
   }
 }

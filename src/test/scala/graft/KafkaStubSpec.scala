@@ -122,30 +122,31 @@ class KafkaStubSpec extends AnyFunSuite {
     KafkaStubBroker.clear()
     (0 until 4).foreach(p => KafkaStubBroker.createPartition("events_raw", p))
     (0 until 20).foreach(i => KafkaStubBroker.publish("events_raw", i % 4, s"pre-$i"))
-    val root = java.nio.file.Files.createTempDirectory("stub_arrival").toString
-    def arrivalOnce(): Unit = {
-      val in = KafkaSource.readStream(spark, "stub:9092", Seq("events_raw"),
-        format = "graft-kafka-stub")
-      val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
-      q.awaitTermination()
+    SpecIo.withTempDir("stub_arrival") { root =>
+      def arrivalOnce(): Unit = {
+        val in = KafkaSource.readStream(spark, "stub:9092", Seq("events_raw"),
+          format = "graft-kafka-stub")
+        val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
+        q.awaitTermination()
+      }
+      arrivalOnce() // starts at LATEST: pins offsets {p: 5}, consumes nothing
+      val ledgerDir = new java.io.File(s"$root/ledger")
+      assert(!ledgerDir.exists() || !ledgerDir.listFiles()
+        .exists(_.getName.startsWith("jobRunId=")),
+        "nothing may be ledgered before the live publishes")
+      val live = (0 until 12).map(i =>
+        (i % 4, KafkaStubBroker.publish("events_raw", i % 4, s"live-$i")))
+      arrivalOnce() // resumes from the checkpoint: exactly the post-start window
+      val data = spark.read.parquet(s"$root/data")
+      assert(data.count() == 12)
+      val vals = data.collect().map(r =>
+        (r.getAs[Int]("partition"), r.getAs[Long]("offset"), r.getAs[String]("value"))).toSet
+      assert(vals == live.zipWithIndex.map { case ((p, o), i) => (p, o, s"live-$i") }.toSet)
+      // ledger rows = the replayOptions shape the reference's kafka_event holds
+      val ledger = spark.read.parquet(s"$root/ledger").collect().map(r =>
+        (r.getAs[Int]("partition"), r.getAs[Long]("fromOffset"), r.getAs[Long]("untilOffset"))).toSet
+      assert(ledger == (0 until 4).map(p => (p, 5L, 8L)).toSet, ledger.toString)
     }
-    arrivalOnce() // starts at LATEST: pins offsets {p: 5}, consumes nothing
-    val ledgerDir = new java.io.File(s"$root/ledger")
-    assert(!ledgerDir.exists() || !ledgerDir.listFiles()
-      .exists(_.getName.startsWith("jobRunId=")),
-      "nothing may be ledgered before the live publishes")
-    val live = (0 until 12).map(i =>
-      (i % 4, KafkaStubBroker.publish("events_raw", i % 4, s"live-$i")))
-    arrivalOnce() // resumes from the checkpoint: exactly the post-start window
-    val data = spark.read.parquet(s"$root/data")
-    assert(data.count() == 12)
-    val vals = data.collect().map(r =>
-      (r.getAs[Int]("partition"), r.getAs[Long]("offset"), r.getAs[String]("value"))).toSet
-    assert(vals == live.zipWithIndex.map { case ((p, o), i) => (p, o, s"live-$i") }.toSet)
-    // ledger rows = the replayOptions shape the reference's kafka_event holds
-    val ledger = spark.read.parquet(s"$root/ledger").collect().map(r =>
-      (r.getAs[Int]("partition"), r.getAs[Long]("fromOffset"), r.getAs[Long]("untilOffset"))).toSet
-    assert(ledger == (0 until 4).map(p => (p, 5L, 8L)).toSet, ledger.toString)
   }
 
   test("maxOffsetsPerTrigger drains a backlog in rate-limited batches and the " +
@@ -157,42 +158,43 @@ class KafkaStubSpec extends AnyFunSuite {
     (0 until 12).foreach(i => KafkaStubBroker.publish("events_raw", 0, s"p0-$i"))
     (0 until 6).foreach(i => KafkaStubBroker.publish("events_raw", 1, s"p1-$i"))
     (0 until 2).foreach(i => KafkaStubBroker.publish("events_raw", 2, s"p2-$i"))
-    val root = java.nio.file.Files.createTempDirectory("stub_ratelimit").toString
-    val in = KafkaSource.readStream(spark, "stub:9092", Seq("events_raw"),
-      format = "graft-kafka-stub", maxOffsetsPerTrigger = Some(8L),
-      startingOffsets = "earliest")
-    val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
-    q.awaitTermination()
-    // options are captured when the scan materializes (query start)
-    assert(KafkaStubBroker.lastStreamOptions("maxoffsetspertrigger") == "8")
-    // every record arrived exactly once
-    val data = spark.read.parquet(s"$root/data")
-    assert(data.count() == 20)
-    val vals = data.collect().map(r =>
-      (r.getAs[Int]("partition"), r.getAs[Long]("offset"))).toSet
-    assert(vals == (0 until 12).map(o => (0, o.toLong)).toSet ++
-      (0 until 6).map(o => (1, o.toLong)).toSet ++
-      (0 until 2).map(o => (2, o.toLong)).toSet)
-    // the run split into ≥3 batches (20 rows / cap 8) and each batch stayed
-    // under the cap — read off the LEDGER, the audit-surface of record
-    val ledger = spark.read.parquet(s"$root/ledger")
-    val perBatch = ledger.groupBy("jobRunId")
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("untilOffset") -
-          org.apache.spark.sql.functions.col("fromOffset")).as("rows"))
-      .collect().map(r => r.getAs[Long]("jobRunId") -> r.getAs[Long]("rows")).toMap
-    assert(perBatch.size >= 3, s"expected >=3 rate-limited batches: $perBatch")
-    assert(perBatch.values.forall(_ <= 8L), s"a batch exceeded the cap: $perBatch")
-    assert(perBatch.values.sum == 20L)
-    // ledger windows are seamless per partition (continuity green)
-    val continuity = graft.dq.Checks.offsetContinuity(ledger, "events_raw")
-    assert(continuity.testResult == graft.model.ValidationResult.PASSED)
-    // proportional split: batch 0 advanced the laggiest partition the most
-    val b0 = ledger.filter(org.apache.spark.sql.functions.col("jobRunId") === 0L)
-      .collect().map(r => r.getAs[Int]("partition") ->
-        (r.getAs[Long]("untilOffset") - r.getAs[Long]("fromOffset"))).toMap
-    assert(b0.getOrElse(0, 0L) > b0.getOrElse(2, 0L),
-      s"prorate must favor the laggy partition: $b0")
+    SpecIo.withTempDir("stub_ratelimit") { root =>
+      val in = KafkaSource.readStream(spark, "stub:9092", Seq("events_raw"),
+        format = "graft-kafka-stub", maxOffsetsPerTrigger = Some(8L),
+        startingOffsets = "earliest")
+      val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
+      q.awaitTermination()
+      // options are captured when the scan materializes (query start)
+      assert(KafkaStubBroker.lastStreamOptions("maxoffsetspertrigger") == "8")
+      // every record arrived exactly once
+      val data = spark.read.parquet(s"$root/data")
+      assert(data.count() == 20)
+      val vals = data.collect().map(r =>
+        (r.getAs[Int]("partition"), r.getAs[Long]("offset"))).toSet
+      assert(vals == (0 until 12).map(o => (0, o.toLong)).toSet ++
+        (0 until 6).map(o => (1, o.toLong)).toSet ++
+        (0 until 2).map(o => (2, o.toLong)).toSet)
+      // the run split into ≥3 batches (20 rows / cap 8) and each batch stayed
+      // under the cap — read off the LEDGER, the audit-surface of record
+      val ledger = spark.read.parquet(s"$root/ledger")
+      val perBatch = ledger.groupBy("jobRunId")
+        .agg(org.apache.spark.sql.functions.sum(
+          org.apache.spark.sql.functions.col("untilOffset") -
+            org.apache.spark.sql.functions.col("fromOffset")).as("rows"))
+        .collect().map(r => r.getAs[Long]("jobRunId") -> r.getAs[Long]("rows")).toMap
+      assert(perBatch.size >= 3, s"expected >=3 rate-limited batches: $perBatch")
+      assert(perBatch.values.forall(_ <= 8L), s"a batch exceeded the cap: $perBatch")
+      assert(perBatch.values.sum == 20L)
+      // ledger windows are seamless per partition (continuity green)
+      val continuity = graft.dq.Checks.offsetContinuity(ledger, "events_raw")
+      assert(continuity.testResult == graft.model.ValidationResult.PASSED)
+      // proportional split: batch 0 advanced the laggiest partition the most
+      val b0 = ledger.filter(org.apache.spark.sql.functions.col("jobRunId") === 0L)
+        .collect().map(r => r.getAs[Int]("partition") ->
+          (r.getAs[Long]("untilOffset") - r.getAs[Long]("fromOffset"))).toMap
+      assert(b0.getOrElse(0, 0L) > b0.getOrElse(2, 0L),
+        s"prorate must favor the laggy partition: $b0")
+    }
   }
 
   test("startingTimestamp resolves offsetsForTimes per partition (earliest " +
@@ -230,22 +232,23 @@ class KafkaStubSpec extends AnyFunSuite {
     "resolved offsets and sees exactly the records from the timestamp on") {
     import graft.streaming.ArrivalJob
     fixture()
-    val root = java.nio.file.Files.createTempDirectory("stub_ts_start").toString
-    val in = graft.sources.KafkaSource.readStream(spark, "stub:9092",
-      Seq("events_raw"), format = "graft-kafka-stub",
-      startingTimestamp = Some(1700000000006L))
-    val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
-    q.awaitTermination()
-    assert(KafkaStubBroker.lastStreamOptions("startingtimestamp") ==
-      "1700000000006")
-    val got = spark.read.parquet(s"$root/data").collect().map(r =>
-      (r.getAs[Int]("partition"), r.getAs[Long]("offset"))).toSet
-    // p0: first ts >= base+6 sits at offset 5+6=11 (head trimmed to 5);
-    // p1: at offset 6 — the stream drains exactly from the resolved
-    // starts to each high-water mark
-    assert(got == ((11L until 17L).map(o => (0, o)) ++
-      (6L until 8L).map(o => (1, o))).toSet,
-      got.toSeq.sorted.mkString(","))
+    SpecIo.withTempDir("stub_ts_start") { root =>
+      val in = graft.sources.KafkaSource.readStream(spark, "stub:9092",
+        Seq("events_raw"), format = "graft-kafka-stub",
+        startingTimestamp = Some(1700000000006L))
+      val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
+      q.awaitTermination()
+      assert(KafkaStubBroker.lastStreamOptions("startingtimestamp") ==
+        "1700000000006")
+      val got = spark.read.parquet(s"$root/data").collect().map(r =>
+        (r.getAs[Int]("partition"), r.getAs[Long]("offset"))).toSet
+      // p0: first ts >= base+6 sits at offset 5+6=11 (head trimmed to 5);
+      // p1: at offset 6 — the stream drains exactly from the resolved
+      // starts to each high-water mark
+      assert(got == ((11L until 17L).map(o => (0, o)) ++
+        (6L until 8L).map(o => (1, o))).toSet,
+        got.toSeq.sorted.mkString(","))
+    }
   }
 
   test("maxOffsetsPerTrigger prorate ROUNDING pinned: floor per partition, " +
@@ -260,20 +263,21 @@ class KafkaStubSpec extends AnyFunSuite {
     KafkaStubBroker.createPartition("events_raw", 1)
     (0 until 5).foreach(i => KafkaStubBroker.publish("events_raw", 0, s"p0-$i"))
     KafkaStubBroker.publish("events_raw", 1, "p1-0")
-    val root = java.nio.file.Files.createTempDirectory("stub_prorate").toString
-    val in = graft.sources.KafkaSource.readStream(spark, "stub:9092",
-      Seq("events_raw"), format = "graft-kafka-stub",
-      maxOffsetsPerTrigger = Some(3L), startingOffsets = "earliest")
-    val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
-    q.awaitTermination()
-    val ledger = spark.read.parquet(s"$root/ledger")
-    val b0 = ledger.filter(org.apache.spark.sql.functions.col("jobRunId") === 0L)
-      .collect().map(r => r.getAs[Int]("partition") ->
-        (r.getAs[Long]("untilOffset") - r.getAs[Long]("fromOffset"))).toMap
-    assert(b0 == Map(0 -> 2L, 1 -> 1L),
-      s"prorate rounding must take (2,1) in batch 0: $b0")
-    // and the drain completes exactly (no row lost or duplicated)
-    assert(spark.read.parquet(s"$root/data").count() == 6L)
+    SpecIo.withTempDir("stub_prorate") { root =>
+      val in = graft.sources.KafkaSource.readStream(spark, "stub:9092",
+        Seq("events_raw"), format = "graft-kafka-stub",
+        maxOffsetsPerTrigger = Some(3L), startingOffsets = "earliest")
+      val q = ArrivalJob.start(in, s"$root/data", s"$root/ledger", s"$root/ckpt")
+      q.awaitTermination()
+      val ledger = spark.read.parquet(s"$root/ledger")
+      val b0 = ledger.filter(org.apache.spark.sql.functions.col("jobRunId") === 0L)
+        .collect().map(r => r.getAs[Int]("partition") ->
+          (r.getAs[Long]("untilOffset") - r.getAs[Long]("fromOffset"))).toMap
+      assert(b0 == Map(0 -> 2L, 1 -> 1L),
+        s"prorate rounding must take (2,1) in batch 0: $b0")
+      // and the drain completes exactly (no row lost or duplicated)
+      assert(spark.read.parquet(s"$root/data").count() == 6L)
+    }
   }
 
   test("failOnDataLoss=false reads past a trimmed head: surviving window only, " +
@@ -569,51 +573,52 @@ class KafkaStubSpec extends AnyFunSuite {
     KafkaStubBroker.publishControl("events_raw", 0)
     val listener = new graft.streaming.OffsetLedgerListener
     spark.streams.addListener(listener)
-    val out = java.nio.file.Files.createTempDirectory("graft_txn_stream").toString
-    def runOnce(): Unit = {
-      val q = KafkaSource.readStream(spark, "stub:9092", Seq("events_raw"),
-          startingOffsets = "earliest", format = "graft-kafka-stub")
-        .writeStream.format("parquet")
-        .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(60000)
+    SpecIo.withTempDir("graft_txn_stream") { out =>
+      def runOnce(): Unit = {
+        val q = KafkaSource.readStream(spark, "stub:9092", Seq("events_raw"),
+            startingOffsets = "earliest", format = "graft-kafka-stub")
+          .writeStream.format("parquet")
+          .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination(60000)
+      }
+      try {
+        // run 1 drains txn 1 and commits the checkpoint at offset 5. Its
+        // progress reports startOffset=null (batch 0 has no committed
+        // offsets — the real connector does the same), so the LISTENER
+        // ledger starts at run 2; see OffsetLedgerListener's scaladoc.
+        runOnce()
+        // txn 2 lands: data offsets 5-7, commit marker at 8
+        (0 until 3).foreach(i => KafkaStubBroker.publish("events_raw", 0, s"b$i"))
+        KafkaStubBroker.publishControl("events_raw", 0)
+        // run 2 resumes from the checkpoint: startOffset={"0":5} is reported,
+        // and the ledger row [5, 9) SPANS the trailing control marker
+        runOnce()
+        // listener events are delivered asynchronously — wait (bounded)
+        val deadline = System.currentTimeMillis() + 30000
+        while (listener.snapshot(spark).count() == 0 &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100)
+        val ledger = listener.snapshot(spark).toDF()
+        assert(ledger.count() == 1L, ledger.collect().mkString(","))
+        val win = ledger.head()
+        assert(win.getAs[Long]("fromOffset") == 5L &&
+          win.getAs[Long]("untilOffset") == 9L, win.toString)
+        // run 2 delivered the 3 data records of txn 2 (offsets 5, 6, 7)
+        import spark.implicits._
+        val actual = spark.read.parquet(s"$out/data")
+          .filter($"offset" >= 5L).count()
+        assert(actual == 3L, s"3 data records in run 2's window, got $actual")
+        // raw arithmetic over the [5, 9) window overcounts by the marker...
+        assert(graft.dq.Checks.offsetCountMatch(ledger, actual, "events_raw")
+          .testResult == graft.model.ValidationResult.FAILED)
+        // ...the txn-aware check reconciles exactly (control offset 8 is in
+        // the window; offset 4 — run 1's marker — is outside it and ignored)
+        val txn = graft.dq.Checks.offsetCountMatchWithControl(
+          ledger, KafkaStubBroker.controlOffsetsDf(spark), actual, "events_raw")
+        assert(txn.testResult == graft.model.ValidationResult.PASSED, txn.comments)
+        assert(txn.comments.contains("control=1"), txn.comments)
+      } finally spark.streams.removeListener(listener)
     }
-    try {
-      // run 1 drains txn 1 and commits the checkpoint at offset 5. Its
-      // progress reports startOffset=null (batch 0 has no committed
-      // offsets — the real connector does the same), so the LISTENER
-      // ledger starts at run 2; see OffsetLedgerListener's scaladoc.
-      runOnce()
-      // txn 2 lands: data offsets 5-7, commit marker at 8
-      (0 until 3).foreach(i => KafkaStubBroker.publish("events_raw", 0, s"b$i"))
-      KafkaStubBroker.publishControl("events_raw", 0)
-      // run 2 resumes from the checkpoint: startOffset={"0":5} is reported,
-      // and the ledger row [5, 9) SPANS the trailing control marker
-      runOnce()
-      // listener events are delivered asynchronously — wait (bounded)
-      val deadline = System.currentTimeMillis() + 30000
-      while (listener.snapshot(spark).count() == 0 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-      val ledger = listener.snapshot(spark).toDF()
-      assert(ledger.count() == 1L, ledger.collect().mkString(","))
-      val win = ledger.head()
-      assert(win.getAs[Long]("fromOffset") == 5L &&
-        win.getAs[Long]("untilOffset") == 9L, win.toString)
-      // run 2 delivered the 3 data records of txn 2 (offsets 5, 6, 7)
-      import spark.implicits._
-      val actual = spark.read.parquet(s"$out/data")
-        .filter($"offset" >= 5L).count()
-      assert(actual == 3L, s"3 data records in run 2's window, got $actual")
-      // raw arithmetic over the [5, 9) window overcounts by the marker...
-      assert(graft.dq.Checks.offsetCountMatch(ledger, actual, "events_raw")
-        .testResult == graft.model.ValidationResult.FAILED)
-      // ...the txn-aware check reconciles exactly (control offset 8 is in
-      // the window; offset 4 — run 1's marker — is outside it and ignored)
-      val txn = graft.dq.Checks.offsetCountMatchWithControl(
-        ledger, KafkaStubBroker.controlOffsetsDf(spark), actual, "events_raw")
-      assert(txn.testResult == graft.model.ValidationResult.PASSED, txn.comments)
-      assert(txn.comments.contains("control=1"), txn.comments)
-    } finally spark.streams.removeListener(listener)
   }
 }

@@ -30,9 +30,9 @@ class MaterializeSpec extends AnyFunSuite {
 
   // 1000 ids over 4 partitions, every 7th one dropped: 857 rows survive.
   // The frame's session picks the cut's kind: the shared one cuts locally,
-  // a `reliableCuts` sibling under `dir`.
+  // a sibling whose checkpoint dir is `dir`.
   private def frame(reliable: Boolean, dir: String) =
-    (if (reliable) TestSpark.reliableCuts(dir) else spark)
+    (if (reliable) TestSpark.sibling("spark.graft.checkpoint.dir" -> dir) else spark)
       .range(0, 1000, 1, 4).filter(col("id") % 7 =!= 0).toDF()
   private val expected = (0 until 1000).count(_ % 7 != 0).toLong
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.model.{ScdType, Watermark}
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
@@ -11,8 +9,9 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_pipe").toString + "/t"
+  /** `f` over a table path inside a temp dir deleted afterwards. */
+  private def withTable[A](f: String => A): A =
+    SpecIo.withTempDir("graft_pipe")(dir => f(dir + "/t"))
 
   test("withRunId stamps lineage columns") {
     val out = Pipeline.withRunId(Seq((1, "a")).toDF("k", "v"), 42L)
@@ -23,23 +22,25 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("writeRun twice with same runId is idempotent (dynamic partition overwrite)") {
-    val path = tmp()
-    Pipeline.writeRun(Seq((1, "a"), (2, "b")).toDF("k", "v"), path, 1L)
-    Pipeline.writeRun(Seq((1, "a"), (2, "b")).toDF("k", "v"), path, 1L)
-    assert(spark.read.parquet(path).count() == 2)
-    assert(Pipeline.rerunClean(spark, path, 1L, expectedCount = 2))
-    // a second run appends its own partition without touching run 1
-    Pipeline.writeRun(Seq((3, "c")).toDF("k", "v"), path, 2L)
-    assert(spark.read.parquet(path).count() == 3)
+    withTable { path =>
+      Pipeline.writeRun(Seq((1, "a"), (2, "b")).toDF("k", "v"), path, 1L)
+      Pipeline.writeRun(Seq((1, "a"), (2, "b")).toDF("k", "v"), path, 1L)
+      assert(spark.read.parquet(path).count() == 2)
+      assert(Pipeline.rerunClean(spark, path, 1L, expectedCount = 2))
+      // a second run appends its own partition without touching run 1
+      Pipeline.writeRun(Seq((3, "c")).toDF("k", "v"), path, 2L)
+      assert(spark.read.parquet(path).count() == 3)
+    }
   }
 
   test("readIncrement prunes to the watermark window; empty watermark → no rows") {
-    val path = tmp()
-    Pipeline.writeRun(Seq((1, "a")).toDF("k", "v"), path, 1L)
-    Pipeline.writeRun(Seq((2, "b")).toDF("k", "v"), path, 2L)
-    Pipeline.writeRun(Seq((3, "c")).toDF("k", "v"), path, 3L)
-    assert(Pipeline.readIncrement(spark, path, Watermark(2, 3)).count() == 2)
-    assert(Pipeline.readIncrement(spark, path, Watermark(0, 0)).count() == 0)
+    withTable { path =>
+      Pipeline.writeRun(Seq((1, "a")).toDF("k", "v"), path, 1L)
+      Pipeline.writeRun(Seq((2, "b")).toDF("k", "v"), path, 2L)
+      Pipeline.writeRun(Seq((3, "c")).toDF("k", "v"), path, 3L)
+      assert(Pipeline.readIncrement(spark, path, Watermark(2, 3)).count() == 2)
+      assert(Pipeline.readIncrement(spark, path, Watermark(0, 0)).count() == 0)
+    }
   }
 
   test("applyScd Type1 upserts on business key") {

@@ -538,21 +538,18 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q128: every language-partitioned window sees only rank-cut survivors") {
-    // the q117 discipline on text, through nativeTopK's plain-session
-    // fallback: phase 1 ranks within (lang, shard); the (lang)-only
-    // phase-2 re-rank and the final rank re-derivation must each be fed
-    // by a rank cut (__r1 <= 20 / rank <= 20) — never the raw
-    // token-count table. (Under a GraftExtensions session the cut is the
-    // native heap operator instead; TopKPlanSpec pins that path.)
-    val ws = windowNodes("q128_zipf_table")
-    assert(ws.length == 3, s"expected shard + re-rank + rank windows, got ${ws.length}")
-    val lone = ws.filter(_.partitionSpec.length == 1)
-    assert(lone.length == 2, s"expected two lang-only windows, got ${lone.length}")
+    // the q117 discipline on text: the rank re-derivation partitions by
+    // lang alone, so it must be fed by the native per-key heap cut
+    // (TopKPerKey's final pass over ≤ langs×20 survivors) — never the raw
+    // token-count table, and no window-form shard cut (__r1 <= 20) either.
+    val lone = windowNodes("q128_zipf_table").filter(_.partitionSpec.length == 1)
+    assert(lone.nonEmpty, "no lang-only window in q128")
     lone.foreach { w =>
-      assert("""(__r1|rank)#\d+ <= 20""".r.findFirstIn(w.child.toString).isDefined,
-        s"lang-only window not fed by a rank cut:\n${w.child}")
+      assert(w.child.collectFirst {
+        case t: graft.plans.TopKPlan.TopKPerKeyExec if !t.partial => t }.isDefined,
+        s"lang-only window not fed by the TopKPerKey cut:\n${w.child}")
+      assert(!w.child.toString.contains("__r1"), s"window-form cut under:\n${w.child}")
     }
-    assert(ws.filterNot(_.partitionSpec.length == 1).head.partitionSpec.length == 2)
   }
 
   test("q147: KMV sketch shuffles carry only (source, hash48) — never text or shingle strings") {

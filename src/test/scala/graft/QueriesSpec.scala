@@ -61,22 +61,23 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q114 finds a planted cross-split near-duplicate") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xsplit").toString
-    // md5 hash buckets (Sampling.hashBucket(id, 100)): 0 → train (<80),
-    // 8 → eval (≥90); identical text plants a jaccard-1.0 cross pair.
-    Seq(
-      (0L, "alpha beta gamma delta epsilon zeta", "en", "web", 35L),
-      (1L, "one two three four five six seven", "en", "web", 33L),
-      (8L, "alpha beta gamma delta epsilon zeta", "en", "web", 35L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("q114_cross_split_neardup")(spark, dir).collect()
-    assert(out.length == 1, out.mkString(";"))
-    val r = out.head
-    assert(r.getLong(0) == 8L, "eval side")
-    assert(r.getLong(1) == 1L, "match count")
-    assert(r.getLong(2) == 0L, "train side")
-    assert(r.getDouble(3) == 1.0, "exact-dup jaccard")
+    SpecIo.withTempDir("graft-xsplit") { dir =>
+      // md5 hash buckets (Sampling.hashBucket(id, 100)): 0 → train (<80),
+      // 8 → eval (≥90); identical text plants a jaccard-1.0 cross pair.
+      Seq(
+        (0L, "alpha beta gamma delta epsilon zeta", "en", "web", 35L),
+        (1L, "one two three four five six seven", "en", "web", 33L),
+        (8L, "alpha beta gamma delta epsilon zeta", "en", "web", 35L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = SparkEntry.queries("q114_cross_split_neardup")(spark, dir).collect()
+      assert(out.length == 1, out.mkString(";"))
+      val r = out.head
+      assert(r.getLong(0) == 8L, "eval side")
+      assert(r.getLong(1) == 1L, "match count")
+      assert(r.getLong(2) == 0L, "train side")
+      assert(r.getDouble(3) == 1.0, "exact-dup jaccard")
+    }
   }
 
   test("q115 funnel stages shrink monotonically and q116 offsets start at the cohort") {
@@ -142,10 +143,11 @@ class QueriesSpec extends AnyFunSuite {
     // The 80th-percentile cut is an in-plan broadcast cross join of the
     // 1-row min/max aggregate — a driver-side .head() here would
     // NullPointerException on getLong(null) before this query ever ran.
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
-    spark.read.parquet(s"$sf/events.parquet").limit(0)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    assert(SparkEntry.queries("q88_cold_start")(spark, dir).count() == 0L)
+    SpecIo.withTempDir("graft-empty") { dir =>
+      spark.read.parquet(s"$sf/events.parquet").limit(0)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      assert(SparkEntry.queries("q88_cold_start")(spark, dir).count() == 0L)
+    }
   }
 
   test("q85 and q139 are identical under local and reliable stage cuts") {
@@ -158,7 +160,8 @@ class QueriesSpec extends AnyFunSuite {
     val local = spark.newSession()
     local.conf.unset("spark.graft.checkpoint.dir")
     SpecIo.withTempDir("graft-cut-ckpt") { ckptDir =>
-      assert(rows(TestSpark.reliableCuts(ckptDir)) == rows(local), "cut kinds disagree")
+      val reliable = TestSpark.sibling("spark.graft.checkpoint.dir" -> ckptDir)
+      assert(rows(reliable) == rows(local), "cut kinds disagree")
       // the reliable cuts actually landed in the checkpoint directory
       def treeSize(p: java.io.File): Long =
         if (p.isDirectory) p.listFiles().map(treeSize).sum else p.length()
@@ -2532,18 +2535,19 @@ class QueriesSpec extends AnyFunSuite {
     // forms must emit TRUE — the null contract (null text → null sig) is
     // itself the invariant being checked.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
-    val spark2 = spark
-    import spark2.implicits._
-    spark.read.parquet(s"$sf/documents.parquet").limit(5)
-      .unionByName(Seq((99999L, Option.empty[String], "xx", "null-src", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = SparkEntry.queries("q29_simhash")(spark, dir).collect()
-    assert(rows.length == 6, "the null-text doc must appear, not drop")
-    rows.foreach { r =>
-      (1 to 3).foreach(i => assert(!r.isNullAt(i) && r.getBoolean(i),
-        s"invariant column $i must be TRUE for doc ${r.getLong(0)}"))
+    SpecIo.withTempDir("graft-nulltext") { dir =>
+      val spark2 = spark
+      import spark2.implicits._
+      spark.read.parquet(s"$sf/documents.parquet").limit(5)
+        .unionByName(Seq((99999L, Option.empty[String], "xx", "null-src", 0L))
+          .toDF("doc_id", "text", "lang", "source", "n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = SparkEntry.queries("q29_simhash")(spark, dir).collect()
+      assert(rows.length == 6, "the null-text doc must appear, not drop")
+      rows.foreach { r =>
+        (1 to 3).foreach(i => assert(!r.isNullAt(i) && r.getBoolean(i),
+          s"invariant column $i must be TRUE for doc ${r.getLong(0)}"))
+      }
     }
   }
 

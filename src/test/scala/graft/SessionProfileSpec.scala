@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every session comes from [[SessionProfile]], and the profile gives
-  * [[Bench]] exactly the settings it always ran with.
+/** Every session comes from [[SessionProfile]] and carries
+  * [[GraftExtensions]], and the profile gives [[Bench]] exactly the
+  * settings it always ran with plus the extensions.
   */
 class SessionProfileSpec extends AnyFunSuite {
 
@@ -15,11 +16,12 @@ class SessionProfileSpec extends AnyFunSuite {
   private val materializeFile = "src/main/scala/graft/ops/Materialize.scala"
 
   // Each token and the only src/main files it may appear in: the profile
-  // builds sessions, and the checkpoint-dir key is set there and read by
-  // the one stage cut alone.
+  // builds sessions and names their extensions, and the checkpoint-dir key
+  // is set there and read by the one stage cut alone.
   private val owners = Seq(
     "SparkSession.builder()" -> Set(profileFile),
     "withExtensions" -> Set(profileFile),
+    "spark.sql.extensions" -> Set(profileFile),
     "spark.graft.checkpoint.dir" -> Set(profileFile, materializeFile))
 
   test("src/main builds sessions and adds extensions only inside the profile") {
@@ -49,6 +51,7 @@ class SessionProfileSpec extends AnyFunSuite {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.ui.enabled" -> "false",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
       "spark.graft.checkpoint.dir" -> ckpt,
       "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))
     // A scale run raises only the shuffle side; no dir, no checkpoint keys.
@@ -56,5 +59,16 @@ class SessionProfileSpec extends AnyFunSuite {
       Set("spark.sql.shuffle.partitions",
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
     assert(!SessionProfile.conf("4", "4").exists(_._1.contains("checkpoint")))
+  }
+
+  test("every session on the profile's context carries GraftExtensions") {
+    val shared = TestSpark.spark
+    for (s <- Seq(shared, shared.newSession()))
+      assert(s.sessionState.planner.strategies
+        .exists(_.isInstanceOf[graft.plans.TopKPlan.Strategy]),
+        "session lacks the native top-k strategy")
+    // the injected SQL functions resolve with no registration call
+    assert(shared.sql("SELECT dot_product(array(1.0D,2.0D), array(3.0D,4.0D))")
+      .head().getDouble(0) == 11.0)
   }
 }

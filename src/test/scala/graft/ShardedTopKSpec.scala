@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ShardedTopKSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = TestSpark.extended(
+  private lazy val spark: SparkSession = TestSpark.sibling(
     "spark.graft.topk.lowCardCols" -> "lang,event_type",
     "spark.graft.topk.shards" -> "8")
 
@@ -33,12 +33,12 @@ class ShardedTopKSpec extends AnyFunSuite {
     }
     assert(windows.length == 2, s"expected phase pair:\n${rewritten.queryExecution.optimizedPlan}")
     assert(windows.exists(_.partitionSpec.length == 2), "no sharded phase-1 window")
-    // same rows as the un-extended session's single-window plan
+    // same rows as the shared session's single-window plan
     val expected = naiveTopK(TestSpark.spark, 5)
       .collect().map(_.toSeq).toSet
     val got = rewritten.collect().map(_.toSeq).toSet
     assert(got == expected)
-    // and the plain session really did NOT rewrite
+    // and the shared session (no lowCardCols) really did NOT rewrite
     val plainWindows = naiveTopK(TestSpark.spark, 5)
       .queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w

@@ -71,7 +71,6 @@ class SkewExtensionsSpec extends AnyFunSuite {
   }
 
   test("custom expressions are callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val dot = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head().getDouble(0)
     assert(dot == 11.0)
@@ -94,7 +93,6 @@ class SkewExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_kmv aggregate is callable from stored SQL text") {
-    GraftFunctions.register(spark)
     // duplicated + unordered input: the sketch is the sorted distinct set
     // while under-full, straight from SQL as a stored query would call it
     val sk = spark.sql(
@@ -104,9 +102,8 @@ class SkewExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_kmv_estimate reads a sketch from stored SQL text, exact below k") {
-    GraftFunctions.register(spark)
-    // under-full sketch → exact distinct count; matches the documented
-    // register() surface (stored SQL calls estimate over the kmv column)
+    // under-full sketch → exact distinct count (stored SQL calls estimate
+    // over the kmv column)
     val est = spark.sql(
       "SELECT graft_kmv_estimate(graft_kmv(h)) AS est " +
         "FROM VALUES (9L), (3L), (9L), (1L), (3L) AS t(h)")
@@ -123,5 +120,16 @@ class SkewExtensionsSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.col("h")).as("sk"))
       .select(graft.functions.Sketches.kmvEstimate("sk")).head().getLong(0)
     assert(viaUdf == viaColumn, s"$viaUdf vs $viaColumn")
+  }
+
+  test("a wrong argument count in stored SQL names the function and both counts") {
+    for ((call, msg) <- Seq(
+        "dot_product(array(1.0D))" -> "dot_product expects 2 arguments, got 1",
+        "hyperplane_signature(array(1.0D), 3)" ->
+          "hyperplane_signature expects 3 or 4 arguments, got 2",
+        "graft_kmv(1L, 2L)" -> "graft_kmv expects 1 arguments, got 2")) {
+      val e = intercept[IllegalArgumentException](spark.sql(s"SELECT $call").collect())
+      assert(e.getMessage == msg, s"$call: ${e.getMessage}")
+    }
   }
 }

@@ -68,20 +68,24 @@ class StageRunnerSpec extends AnyFunSuite {
     val ctl = controlDf((5L, 1))
     val job = StageJob(1, "j1", "t_all", "3NF",
       "SELECT * FROM t_all", "SELECT * FROM t_all", None)
-    val audit = Files.createTempDirectory("graft_audit").toString + "/log"
-    val outcomes = StageRunner.runAll(spark, Seq(job), ctl, 0L, Some(audit))
-    assert(outcomes.length == 1 && !outcomes.head.skipped)
-    val logged = spark.read.parquet(audit)
-    assert(logged.count() == 4)
+    SpecIo.withTempDir("graft_audit") { scratch =>
+      val audit = scratch + "/log"
+      val outcomes = StageRunner.runAll(spark, Seq(job), ctl, 0L, Some(audit))
+      assert(outcomes.length == 1 && !outcomes.head.skipped)
+      val logged = spark.read.parquet(audit)
+      assert(logged.count() == 4)
+    }
   }
 
   test("jobsFromConfig parses the query.txt colon format") {
-    val p = Files.createTempDirectory("graft_cfg").resolve("query.txt")
-    Files.writeString(p,
-      "job_a:SELECT 1 AS x:SELECT 1 AS x:SELECT * FROM t WHERE x IS NULL\n" +
-        "job_b:SELECT 2 AS y:SELECT 2 AS y\n")
-    val jobs = StageRunner.jobsFromConfig(spark, p.toString, "DWDD")
-    assert(jobs.map(_.jobName) == Seq("job_a", "job_b"))
-    assert(jobs.head.nullQuery.isDefined && jobs(1).nullQuery.isEmpty)
+    SpecIo.withTempDir("graft_cfg") { dir =>
+      val p = java.nio.file.Paths.get(dir, "query.txt")
+      Files.writeString(p,
+        "job_a:SELECT 1 AS x:SELECT 1 AS x:SELECT * FROM t WHERE x IS NULL\n" +
+          "job_b:SELECT 2 AS y:SELECT 2 AS y\n")
+      val jobs = StageRunner.jobsFromConfig(spark, p.toString, "DWDD")
+      assert(jobs.map(_.jobName) == Seq("job_a", "job_b"))
+      assert(jobs.head.nullQuery.isDefined && jobs(1).nullQuery.isEmpty)
+    }
   }
 }

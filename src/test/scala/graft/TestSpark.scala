@@ -8,34 +8,14 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = SessionProfile.session("4", "4")
 
-  /** A sibling session over the shared context carrying [[GraftExtensions]]
-    * (extensions are per-session state), with `extra` settings on top of
-    * the profile's. [[spark]] is forced FIRST and stays the active and
-    * default session: a lazy plain session initialized while this one is
-    * active would alias it via getOrCreate, silently giving the "plain"
-    * session the extensions.
+  /** A sibling session over the shared context with `settings` on top of
+    * [[spark]]'s: specs that change a session setting (AQE, the
+    * `spark.graft.topk.*` rewrite, a reliable cut's checkpoint dir) build
+    * their frames on it while [[spark]] keeps the profile's.
     */
-  def extended(extra: (String, String)*): SparkSession = {
-    val plain = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = (SessionProfile.conf("4", "4") ++ extra)
-      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(plain)
-    SparkSession.setActiveSession(plain)
-    s
-  }
-
-  /** A sibling session over the shared context whose stage cuts are
-    * reliable checkpoints under `dir`: a cut's kind comes from its frame's
-    * session, so frames built on this one cut there while [[spark]] keeps
-    * cutting locally.
-    */
-  def reliableCuts(dir: String): SparkSession = {
+  def sibling(settings: (String, String)*): SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.graft.checkpoint.dir", dir)
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 }

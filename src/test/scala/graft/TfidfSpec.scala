@@ -60,116 +60,120 @@ class TfidfSpec extends AnyFunSuite {
   }
 
   test("probing the materialized index returns exactly the recompute answer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
-    val path = s"$dir/postings"
-    Tfidf.writeIndex(
-      Tfidf.buildIndex(corpus, col("doc_id"), col("text"), maxDfFrac = 1.0), path)
-    val q = corpus.filter(col("doc_id") < 3)
-    val fromIndex = Tfidf.sparseTopKIndexed(spark.read.parquet(path),
-      q, col("doc_id"), col("text"), k = 10)
-      .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
-        r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
-    val recomputed = Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0)
-      .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
-        r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
-    assert(fromIndex == recomputed && fromIndex.nonEmpty, s"$fromIndex vs $recomputed")
+    SpecIo.withTempDir("graft_idx") { dir =>
+      val path = s"$dir/postings"
+      Tfidf.writeIndex(
+        Tfidf.buildIndex(corpus, col("doc_id"), col("text"), maxDfFrac = 1.0), path)
+      val q = corpus.filter(col("doc_id") < 3)
+      val fromIndex = Tfidf.sparseTopKIndexed(spark.read.parquet(path),
+        q, col("doc_id"), col("text"), k = 10)
+        .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
+          r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
+      val recomputed = Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0)
+        .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
+          r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
+      assert(fromIndex == recomputed && fromIndex.nonEmpty, s"$fromIndex vs $recomputed")
+    }
   }
 
   test("cachedIndex rebuilds when the source changes and PURGES the stale " +
     "version — same-corpus entries never accumulate, other corpora untouched") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
-    val src = s"$root/corpus.parquet"
-    val cacheRoot = s"$root/cache"
-    spark.conf.set("spark.graft.index.cache.dir", cacheRoot)
-    try {
-      corpus.write.parquet(src)
-      def probe(): Set[(Long, Long)] = Tfidf.sparseTopKIndexed(
-        Tfidf.cachedIndex(spark.read.parquet(src), col("doc_id"), col("text"),
-          maxDfFrac = 1.0, sourceDir = src),
-        corpus.filter(col("doc_id") === 1), col("doc_id"), col("text"), k = 10)
-        .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"))).toSet
-      val first = probe()
-      assert(first.nonEmpty)
-      def cacheDirs: Set[String] =
-        new java.io.File(cacheRoot).listFiles().map(_.getName).toSet
-      val v1 = cacheDirs
-      assert(v1.size == 1)
-      // regenerate the corpus at the same path: doc 2 gone
-      corpus.filter(col("doc_id") =!= 2).write.mode("overwrite").parquet(src)
-      val second = probe()
-      val v2 = cacheDirs
-      // rebuilt (fingerprint moved), stale version purged, answer current
-      assert(v2.size == 1 && v2 != v1, s"$v1 -> $v2")
-      assert(!second.contains((1L, 2L)) && second != first, second.toString)
-    } finally spark.conf.unset("spark.graft.index.cache.dir")
+    SpecIo.withTempDir("graft_idx_cache") { root =>
+      val src = s"$root/corpus.parquet"
+      val cacheRoot = s"$root/cache"
+      spark.conf.set("spark.graft.index.cache.dir", cacheRoot)
+      try {
+        corpus.write.parquet(src)
+        def probe(): Set[(Long, Long)] = Tfidf.sparseTopKIndexed(
+          Tfidf.cachedIndex(spark.read.parquet(src), col("doc_id"), col("text"),
+            maxDfFrac = 1.0, sourceDir = src),
+          corpus.filter(col("doc_id") === 1), col("doc_id"), col("text"), k = 10)
+          .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"))).toSet
+        val first = probe()
+        assert(first.nonEmpty)
+        def cacheDirs: Set[String] =
+          new java.io.File(cacheRoot).listFiles().map(_.getName).toSet
+        val v1 = cacheDirs
+        assert(v1.size == 1)
+        // regenerate the corpus at the same path: doc 2 gone
+        corpus.filter(col("doc_id") =!= 2).write.mode("overwrite").parquet(src)
+        val second = probe()
+        val v2 = cacheDirs
+        // rebuilt (fingerprint moved), stale version purged, answer current
+        assert(v2.size == 1 && v2 != v1, s"$v1 -> $v2")
+        assert(!second.contains((1L, 2L)) && second != first, second.toString)
+      } finally spark.conf.unset("spark.graft.index.cache.dir")
+    }
   }
 
   test("cachedIndex HEALS a half-built cache entry (dir without _SUCCESS, " +
     "a crash corpse): it is deleted and rebuilt, never silently served") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idx_heal").toString
-    val src = s"$root/corpus.parquet"
-    val cacheRoot = s"$root/cache"
-    spark.conf.set("spark.graft.index.cache.dir", cacheRoot)
-    try {
-      corpus.write.parquet(src)
-      def probe(): Set[(Long, Long)] = Tfidf.sparseTopKIndexed(
-        Tfidf.cachedIndex(spark.read.parquet(src), col("doc_id"), col("text"),
-          maxDfFrac = 1.0, sourceDir = src),
-        corpus.filter(col("doc_id") === 1), col("doc_id"), col("text"), k = 10)
-        .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"))).toSet
-      val first = probe()
-      assert(first.nonEmpty)
-      // forge the corpse: strip the marker and a data file from the entry
-      val entry = new java.io.File(cacheRoot).listFiles()
-        .filter(f => f.isDirectory && !f.getName.contains(".tmp_")).head
-      assert(new java.io.File(entry, "_SUCCESS").delete())
-      entry.listFiles().filter(_.getName.endsWith(".parquet")).take(1)
-        .foreach(f => assert(f.delete()))
-      // the next call must rebuild a COMPLETE entry with identical answers
-      // (pre-fix, the rename degraded to copy-INTO, the sweep deleted the
-      // fresh build, and the partial corpse was served forever after)
-      val healed = probe()
-      assert(healed == first, s"$healed vs $first")
-      val entry2 = new java.io.File(cacheRoot).listFiles()
-        .filter(f => f.isDirectory && !f.getName.contains(".tmp_")).head
-      assert(new java.io.File(entry2, "_SUCCESS").exists(),
-        "healed entry must be a complete published version")
-    } finally spark.conf.unset("spark.graft.index.cache.dir")
+    SpecIo.withTempDir("graft_idx_heal") { root =>
+      val src = s"$root/corpus.parquet"
+      val cacheRoot = s"$root/cache"
+      spark.conf.set("spark.graft.index.cache.dir", cacheRoot)
+      try {
+        corpus.write.parquet(src)
+        def probe(): Set[(Long, Long)] = Tfidf.sparseTopKIndexed(
+          Tfidf.cachedIndex(spark.read.parquet(src), col("doc_id"), col("text"),
+            maxDfFrac = 1.0, sourceDir = src),
+          corpus.filter(col("doc_id") === 1), col("doc_id"), col("text"), k = 10)
+          .collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"))).toSet
+        val first = probe()
+        assert(first.nonEmpty)
+        // forge the corpse: strip the marker and a data file from the entry
+        val entry = new java.io.File(cacheRoot).listFiles()
+          .filter(f => f.isDirectory && !f.getName.contains(".tmp_")).head
+        assert(new java.io.File(entry, "_SUCCESS").delete())
+        entry.listFiles().filter(_.getName.endsWith(".parquet")).take(1)
+          .foreach(f => assert(f.delete()))
+        // the next call must rebuild a COMPLETE entry with identical answers
+        // (pre-fix, the rename degraded to copy-INTO, the sweep deleted the
+        // fresh build, and the partial corpse was served forever after)
+        val healed = probe()
+        assert(healed == first, s"$healed vs $first")
+        val entry2 = new java.io.File(cacheRoot).listFiles()
+          .filter(f => f.isDirectory && !f.getName.contains(".tmp_")).head
+        assert(new java.io.File(entry2, "_SUCCESS").exists(),
+          "healed entry must be a complete published version")
+      } finally spark.conf.unset("spark.graft.index.cache.dir")
+    }
   }
 
   test("incremental index: two appended batches answer exactly like a " +
     "monolithic recompute, and the stopword cap tracks the GROWN corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_inc").toString
-    val batchA = corpus.filter(col("doc_id") <= 2) // apple zebra / apple cherry
-    val batchB = corpus.filter(col("doc_id") > 2)
-    Tfidf.appendToIndex(batchA, col("doc_id"), col("text"), dir)
-    Tfidf.appendToIndex(batchB, col("doc_id"), col("text"), dir)
-    val q = corpus.filter(col("doc_id") < 3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
-        r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
-    // full-frac: identical to the monolithic recompute over all 4 docs
-    val incremental = rows(Tfidf.sparseTopKIncremental(spark, dir,
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
-    val monolithic = rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
-    assert(incremental == monolithic && incremental.nonEmpty)
-    // the cap is evaluated at PROBE time against the summed stats: at
-    // maxDfFrac=0.5 apple (df 2+1=3 of N=4) and cherry (df 3) are dropped,
-    // zebra (1) and banana (2) survive — exactly sparseTopK's behavior on
-    // the full corpus, which a BAKED batch-A index (apple df 2 of N 2,
-    // kept at 1.0 but dropped at 0.5... frozen either way) could not track
-    val capped = rows(Tfidf.sparseTopKIncremental(spark, dir,
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 0.5))
-    val cappedMono = rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 0.5))
-    assert(capped == cappedMono && capped == Set((1L, 1L, 1000000L * 10000L, 1)))
-    // append-only on disk: three parquet legs, two batch rows of corpus
-    // stats, nothing rewritten
-    val cs = spark.read.parquet(s"$dir/corpus_stats")
-    assert(cs.count() == 2)
-    assert(cs.agg(sum(col("n_docs"))).head().getLong(0) == 4L)
+    SpecIo.withTempDir("graft_idx_inc") { dir =>
+      val batchA = corpus.filter(col("doc_id") <= 2) // apple zebra / apple cherry
+      val batchB = corpus.filter(col("doc_id") > 2)
+      Tfidf.appendToIndex(batchA, col("doc_id"), col("text"), dir)
+      Tfidf.appendToIndex(batchB, col("doc_id"), col("text"), dir)
+      val q = corpus.filter(col("doc_id") < 3)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
+          r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
+      // full-frac: identical to the monolithic recompute over all 4 docs
+      val incremental = rows(Tfidf.sparseTopKIncremental(spark, dir,
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
+      val monolithic = rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
+      assert(incremental == monolithic && incremental.nonEmpty)
+      // the cap is evaluated at PROBE time against the summed stats: at
+      // maxDfFrac=0.5 apple (df 2+1=3 of N=4) and cherry (df 3) are dropped,
+      // zebra (1) and banana (2) survive — exactly sparseTopK's behavior on
+      // the full corpus, which a BAKED batch-A index (apple df 2 of N 2,
+      // kept at 1.0 but dropped at 0.5... frozen either way) could not track
+      val capped = rows(Tfidf.sparseTopKIncremental(spark, dir,
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 0.5))
+      val cappedMono = rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 0.5))
+      assert(capped == cappedMono && capped == Set((1L, 1L, 1000000L * 10000L, 1)))
+      // append-only on disk: three parquet legs, two batch rows of corpus
+      // stats, nothing rewritten
+      val cs = spark.read.parquet(s"$dir/corpus_stats")
+      assert(cs.count() == 2)
+      assert(cs.agg(sum(col("n_docs"))).head().getLong(0) == 4L)
+    }
   }
 
   test("CONCURRENT appends: two batches published simultaneously answer " +
@@ -178,133 +182,137 @@ class TfidfSpec extends AnyFunSuite {
     // so simultaneous batches on one directory are safe by construction
     // (the old append-mode writes raced the shared _temporary commit dir).
     // This pins the q239 overlap: same stats, same probe, two corpus rows.
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_conc").toString
-    val batchA = corpus.filter(col("doc_id") <= 2)
-    val batchB = corpus.filter(col("doc_id") > 2)
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(Seq(
-            Future(Tfidf.appendToIndex(batchA, col("doc_id"), col("text"), dir)),
-            Future(Tfidf.appendToIndex(batchB, col("doc_id"), col("text"), dir)))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+    SpecIo.withTempDir("graft_idx_conc") { dir =>
+      val batchA = corpus.filter(col("doc_id") <= 2)
+      val batchB = corpus.filter(col("doc_id") > 2)
+      locally {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        try {
+          import scala.concurrent.{Await, ExecutionContext, Future}
+          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+          Await.result(Future.sequence(Seq(
+              Future(Tfidf.appendToIndex(batchA, col("doc_id"), col("text"), dir)),
+              Future(Tfidf.appendToIndex(batchB, col("doc_id"), col("text"), dir)))),
+            scala.concurrent.duration.Duration.Inf)
+        } finally pool.shutdown()
+      }
+      val q = corpus.filter(col("doc_id") < 3)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
+          r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
+      val concurrent = rows(Tfidf.sparseTopKIncremental(spark, dir,
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
+      val monolithic = rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
+      assert(concurrent == monolithic && concurrent.nonEmpty)
+      val cs = spark.read.parquet(s"$dir/corpus_stats")
+      assert(cs.count() == 2)
+      assert(cs.agg(sum(col("n_docs"))).head().getLong(0) == 4L)
+      // no leftover private staging dirs after publish
+      val leftovers = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith(".append_tmp_"))
+      assert(leftovers.isEmpty, leftovers.mkString(", "))
     }
-    val q = corpus.filter(col("doc_id") < 3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
-        r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
-    val concurrent = rows(Tfidf.sparseTopKIncremental(spark, dir,
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
-    val monolithic = rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0))
-    assert(concurrent == monolithic && concurrent.nonEmpty)
-    val cs = spark.read.parquet(s"$dir/corpus_stats")
-    assert(cs.count() == 2)
-    assert(cs.agg(sum(col("n_docs"))).head().getLong(0) == 4L)
-    // no leftover private staging dirs after publish
-    val leftovers = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith(".append_tmp_"))
-    assert(leftovers.isEmpty, leftovers.mkString(", "))
   }
 
   test("compactIndex: the probe over the compacted directory is byte-" +
     "identical to pre-compaction AND to the monolithic recompute; stats " +
     "collapse to one row per term / one corpus row; appends keep working") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_cpt").toString
-    val batchA = corpus.filter(col("doc_id") <= 2)
-    val batchB = corpus.filter(col("doc_id") > 2)
-    Tfidf.appendToIndex(batchA, col("doc_id"), col("text"), dir)
-    Tfidf.appendToIndex(batchB, col("doc_id"), col("text"), dir)
-    val q = corpus.filter(col("doc_id") < 3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
-        r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
-    def probe(frac: Double) = rows(Tfidf.sparseTopKIncremental(spark, dir,
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = frac))
-    val before = probe(1.0)
-    val beforeCapped = probe(0.5)
-    Tfidf.compactIndex(spark, dir)
-    // pure layout rewrite: identical at both frac settings, and still
-    // identical to the monolithic recompute
-    assert(probe(1.0) == before && before.nonEmpty)
-    assert(probe(0.5) == beforeCapped)
-    assert(before == rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
-      q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0)))
-    // stats collapsed: one corpus row, one row per term
-    assert(spark.read.parquet(s"$dir/corpus_stats").count() == 1L)
-    val ts = spark.read.parquet(s"$dir/term_stats")
-    assert(ts.count() == ts.select("term").distinct().count())
-    // postings term-locality restored: each file holds disjoint terms'
-    // contiguous runs (sorted within partitions) — pin via sorted scan
-    val post = spark.read.parquet(s"$dir/postings")
-    assert(post.count() == Tfidf.rawPostings(corpus, col("doc_id"), col("text")).count())
-    // the directory is still APPENDABLE after compaction: a third batch
-    // of new docs lands and the probe tracks the grown corpus exactly
-    import spark.implicits._
-    val batchC = Seq((5L, "zebra zebra banana")).toDF("doc_id", "text")
-    Tfidf.appendToIndex(batchC, col("doc_id"), col("text"), dir)
-    val grown = Tfidf.sparseTopK(corpus.unionByName(batchC),
-      col("doc_id"), col("text"), q, col("doc_id"), col("text"),
-      k = 10, maxDfFrac = 1.0)
-    assert(probe(1.0) == rows(grown))
-    // no postings-side term exchange in the probe plan: the only
-    // term-keyed shuffles allowed are over the vocab-bounded stats legs
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val plan = Tfidf.sparseTopKIncremental(spark, dir, q,
-      col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0)
-      .queryExecution.sparkPlan
-    val termExchanges = plan.collect {
-      case e: ShuffleExchangeExec
-        if e.outputPartitioning.toString.contains("term") => e
+    SpecIo.withTempDir("graft_idx_cpt") { dir =>
+      val batchA = corpus.filter(col("doc_id") <= 2)
+      val batchB = corpus.filter(col("doc_id") > 2)
+      Tfidf.appendToIndex(batchA, col("doc_id"), col("text"), dir)
+      Tfidf.appendToIndex(batchB, col("doc_id"), col("text"), dir)
+      val q = corpus.filter(col("doc_id") < 3)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getAs[Long]("q"), r.getAs[Long]("d"),
+          r.getAs[Long]("score"), r.getAs[Int]("rnk"))).toSet
+      def probe(frac: Double) = rows(Tfidf.sparseTopKIncremental(spark, dir,
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = frac))
+      val before = probe(1.0)
+      val beforeCapped = probe(0.5)
+      Tfidf.compactIndex(spark, dir)
+      // pure layout rewrite: identical at both frac settings, and still
+      // identical to the monolithic recompute
+      assert(probe(1.0) == before && before.nonEmpty)
+      assert(probe(0.5) == beforeCapped)
+      assert(before == rows(Tfidf.sparseTopK(corpus, col("doc_id"), col("text"),
+        q, col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0)))
+      // stats collapsed: one corpus row, one row per term
+      assert(spark.read.parquet(s"$dir/corpus_stats").count() == 1L)
+      val ts = spark.read.parquet(s"$dir/term_stats")
+      assert(ts.count() == ts.select("term").distinct().count())
+      // postings term-locality restored: each file holds disjoint terms'
+      // contiguous runs (sorted within partitions) — pin via sorted scan
+      val post = spark.read.parquet(s"$dir/postings")
+      assert(post.count() == Tfidf.rawPostings(corpus, col("doc_id"), col("text")).count())
+      // the directory is still APPENDABLE after compaction: a third batch
+      // of new docs lands and the probe tracks the grown corpus exactly
+      import spark.implicits._
+      val batchC = Seq((5L, "zebra zebra banana")).toDF("doc_id", "text")
+      Tfidf.appendToIndex(batchC, col("doc_id"), col("text"), dir)
+      val grown = Tfidf.sparseTopK(corpus.unionByName(batchC),
+        col("doc_id"), col("text"), q, col("doc_id"), col("text"),
+        k = 10, maxDfFrac = 1.0)
+      assert(probe(1.0) == rows(grown))
+      // no postings-side term exchange in the probe plan: the only
+      // term-keyed shuffles allowed are over the vocab-bounded stats legs
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      val plan = Tfidf.sparseTopKIncremental(spark, dir, q,
+        col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0)
+        .queryExecution.sparkPlan
+      val termExchanges = plan.collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.toString.contains("term") => e
+      }
+      assert(termExchanges.forall(e => !e.toString.contains("postings")),
+        s"postings must never shuffle on term:\n${termExchanges.mkString("\n")}")
     }
-    assert(termExchanges.forall(e => !e.toString.contains("postings")),
-      s"postings must never shuffle on term:\n${termExchanges.mkString("\n")}")
   }
 
   test("compactIndex crash recovery: a table retired but not replaced is " +
     "restored by the next compaction's recovery sweep") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_crash").toString
-    Tfidf.appendToIndex(corpus, col("doc_id"), col("text"), dir)
-    // simulate the worst crash window: postings retired to .old, new one
-    // never published
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(root, ".compact_tmp")
-    fs.mkdirs(tmp)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(root, "postings"),
-      new org.apache.hadoop.fs.Path(tmp, "postings.old")))
-    Tfidf.compactIndex(spark, dir) // recovery sweep restores, then compacts
-    val q = corpus.filter(col("doc_id") < 3)
-    val got = Tfidf.sparseTopKIncremental(spark, dir, q,
-      col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0).count()
-    assert(got > 0)
+    SpecIo.withTempDir("graft_idx_crash") { dir =>
+      Tfidf.appendToIndex(corpus, col("doc_id"), col("text"), dir)
+      // simulate the worst crash window: postings retired to .old, new one
+      // never published
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val tmp = new org.apache.hadoop.fs.Path(root, ".compact_tmp")
+      fs.mkdirs(tmp)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(root, "postings"),
+        new org.apache.hadoop.fs.Path(tmp, "postings.old")))
+      Tfidf.compactIndex(spark, dir) // recovery sweep restores, then compacts
+      val q = corpus.filter(col("doc_id") < 3)
+      val got = Tfidf.sparseTopKIncremental(spark, dir, q,
+        col("doc_id"), col("text"), k = 10, maxDfFrac = 1.0).count()
+      assert(got > 0)
+    }
   }
 
   test("warm index probe plan: no tokenize/explode, no corpus-keyed window " +
     "exchange — the scan+broadcast-join shape build-once/probe-many buys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_plan").toString
-    val path = s"$dir/postings"
-    Tfidf.writeIndex(
-      Tfidf.buildIndex(corpus, col("doc_id"), col("text"), maxDfFrac = 1.0), path)
-    val probe = Tfidf.sparseTopKIndexed(spark.read.parquet(path),
-      corpus.filter(col("doc_id") === 1), col("doc_id"), col("text"), k = 10)
-    val plan = probe.queryExecution.executedPlan.toString
-    // the corpus-side work buildIndex paid must be GONE from the probe:
-    // no Generate (tokenize+explode the corpus; the tiny query side is
-    // collected through termCounts but rides the broadcast), and no
-    // term-partitioned window (the df computation)
-    assert(!plan.contains("windowspecdefinition(term"), plan.take(2000))
-    assert(!plan.contains("hashpartitioning(term"), plan.take(2000))
-    // column pruning reaches the postings scan: the probe needs only
-    // (term, d, w, tfc) of the 7 persisted columns
-    val scan = plan.linesIterator.find(l => l.contains("FileScan parquet") &&
-      l.contains("postings")).getOrElse(fail(s"no postings scan in:\n$plan"))
-    assert(scan.contains("ReadSchema") &&
-      !scan.contains("tf_d") && !scan.contains("df") && !scan.contains("dl"),
-      scan)
+    SpecIo.withTempDir("graft_idx_plan") { dir =>
+      val path = s"$dir/postings"
+      Tfidf.writeIndex(
+        Tfidf.buildIndex(corpus, col("doc_id"), col("text"), maxDfFrac = 1.0), path)
+      val probe = Tfidf.sparseTopKIndexed(spark.read.parquet(path),
+        corpus.filter(col("doc_id") === 1), col("doc_id"), col("text"), k = 10)
+      val plan = probe.queryExecution.executedPlan.toString
+      // the corpus-side work buildIndex paid must be GONE from the probe:
+      // no Generate (tokenize+explode the corpus; the tiny query side is
+      // collected through termCounts but rides the broadcast), and no
+      // term-partitioned window (the df computation)
+      assert(!plan.contains("windowspecdefinition(term"), plan.take(2000))
+      assert(!plan.contains("hashpartitioning(term"), plan.take(2000))
+      // column pruning reaches the postings scan: the probe needs only
+      // (term, d, w, tfc) of the 7 persisted columns
+      val scan = plan.linesIterator.find(l => l.contains("FileScan parquet") &&
+        l.contains("postings")).getOrElse(fail(s"no postings scan in:\n$plan"))
+      assert(scan.contains("ReadSchema") &&
+        !scan.contains("tf_d") && !scan.contains("df") && !scan.contains("dl"),
+        scan)
+    }
   }
 }

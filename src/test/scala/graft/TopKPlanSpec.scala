@@ -8,18 +8,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native per-key top-k physical operator: exactness against the window
-  * form, the partial/final plan shape, and the extension-less fall-back.
+  * form and the partial/final plan shape.
   */
 class TopKPlanSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** A session carrying GraftExtensions (hint rule + planner strategy).
-    * AQE is off so the partial/final exec pair is visible to plan.collect
+  /** AQE is off so the partial/final exec pair is visible to plan.collect
     * (the AdaptiveSparkPlanExec wrapper hides its executed subtree).
     */
-  private lazy val extended: SparkSession =
-    TestSpark.extended("spark.sql.adaptive.enabled" -> "false")
+  private lazy val planning: SparkSession =
+    TestSpark.sibling("spark.sql.adaptive.enabled" -> "false")
 
   private def windowTopK(df: DataFrame, keys: Seq[String],
                          order: Seq[(String, Boolean)], k: Int): DataFrame = {
@@ -36,25 +35,25 @@ class TopKPlanSpec extends AnyFunSuite {
   test("native top-k returns exactly the window form's rows (composite key, mixed order)") {
     val keys = Seq("lang", "source")
     val order = Seq(("n_chars", false), ("doc_id", true))
-    val native = Relational.nativeTopK(docs(extended), keys, order, 3)
+    val native = Relational.nativeTopK(docs(planning), keys, order, 3)
     // the hint actually became the native node on this session
     assert(native.queryExecution.analyzed.collectFirst {
       case t: TopKPlan.TopKPerKey => t }.isDefined, "hint did not resolve to TopKPerKey")
-    val expected = windowTopK(docs(extended), keys, order, 3)
+    val expected = windowTopK(docs(planning), keys, order, 3)
       .collect().map(_.toSeq).toSet
     val got = native.collect().map(_.toSeq).toSet
     assert(got == expected, s"native=${got.size} window=${expected.size}")
   }
 
   test("k larger than every group returns the full input") {
-    val n = docs(extended).count()
-    val all = Relational.nativeTopK(docs(extended),
+    val n = docs(planning).count()
+    val all = Relational.nativeTopK(docs(planning),
       Seq("lang"), Seq(("doc_id", true)), k = 1000000)
     assert(all.count() == n)
   }
 
   test("plan is a partial/final heap pair with the key-clustered exchange between them") {
-    val df = Relational.nativeTopK(docs(extended),
+    val df = Relational.nativeTopK(docs(planning),
       Seq("lang"), Seq(("n_chars", false), ("doc_id", true)), 5)
     df.collect()
     val plan = df.queryExecution.executedPlan
@@ -74,31 +73,33 @@ class TopKPlanSpec extends AnyFunSuite {
       s"partial pass is not below the exchange:\n$plan")
   }
 
-  test("a session without GraftExtensions falls back to the two-phase window, same rows") {
-    val s = TestSpark.spark
-    val keys = Seq("lang")
-    val order = Seq(("n_chars", false), ("doc_id", true))
-    val fallback = Relational.nativeTopK(docs(s), keys, order, 4)
-    assert(fallback.queryExecution.analyzed.collectFirst {
-      case t: TopKPlan.TopKPerKey => t }.isEmpty, "plain session must not see the node")
-    val expected = windowTopK(docs(s), keys, order, 4).collect().map(_.toSeq).toSet
-    assert(fallback.collect().map(_.toSeq).toSet == expected)
-    assert(fallback.columns.toSeq == docs(s).columns.toSeq, "no rank column leaks")
-  }
-
   test("q128 zipf rides the native operator under extensions — identical rows to the plain session") {
-    val plain = SparkEntry.queries("q128_zipf_table")(TestSpark.spark, sf)
-    val native = SparkEntry.queries("q128_zipf_table")(extended, sf)
+    val spark = TestSpark.spark
+    val native = SparkEntry.queries("q128_zipf_table")(spark, sf)
     assert(native.queryExecution.analyzed.collectFirst {
       case t: TopKPlan.TopKPerKey => t }.isDefined,
-      "extensions session must plan the native top-k node")
+      "the profile session must plan the native top-k node")
+    // q128 replayed on the window form: token counts per language, the
+    // first 20 by (count desc, token), ranked.
+    val counts = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("lang"),
+        explode(graft.functions.Text.tokens(graft.functions.Text.normalized(col("text"))))
+          .as("token"))
+      .groupBy(col("lang"), col("token"))
+      .agg(count(lit(1)).as("n_occurrences"))
+    val replay = windowTopK(counts, Seq("lang"),
+        Seq(("n_occurrences", false), ("token", true)), 20)
+      .withColumn("rank", row_number().over(Window.partitionBy(col("lang"))
+        .orderBy(col("n_occurrences").desc, col("token"))).cast("long"))
+      .select(col("lang"), col("rank"), col("token"), col("n_occurrences"))
+      .orderBy(col("lang"), col("rank"))
     assert(native.collect().map(_.toSeq).toSeq ==
-      plain.collect().map(_.toSeq).toSeq, "paths disagree")
+      replay.collect().map(_.toSeq).toSeq, "paths disagree")
   }
 
   test("unknown column in the hint fails loudly, not silently") {
     intercept[Exception] {
-      Relational.nativeTopK(docs(extended),
+      Relational.nativeTopK(docs(planning),
         Seq("nope"), Seq(("doc_id", true)), 2).collect()
     }
   }

@@ -414,148 +414,152 @@ class WindowedStreamingSpec extends AnyFunSuite {
   test("startAsOfEnrich appends per-batch DQ audit rows next to the enriched output") {
     implicit val sqlCtx = spark.sqlContext
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_asof_audit").toString
-    val dim = Seq((7L, ts("2024-01-01 00:00:00"), 100L))
-      .toDF("item_id", "effective_from", "price")
-    val stream = MemoryStream[Click]
-    stream.addData(Click(7L, ts("2024-01-02 12:00:00"), "p1"),
-      Click(7L, ts("2024-01-03 12:00:00"), "p2"))
-    val q = Windowed.startAsOfEnrich(
-      stream.toDF().withColumnRenamed("user_id", "item_id"),
-      () => dim, "item_id", "click_ts", Seq("price"),
-      s"$root/out", s"$root/ckpt", auditPath = Some(s"$root/audit"))
-    q.processAllAvailable(); q.stop()
-    stream.addData(Click(7L, ts("2024-01-04 12:00:00"), "p3"))
-    val q2 = Windowed.startAsOfEnrich(
-      stream.toDF().withColumnRenamed("user_id", "item_id"),
-      () => dim, "item_id", "click_ts", Seq("price"),
-      s"$root/out", s"$root/ckpt", auditPath = Some(s"$root/audit"))
-    q2.processAllAvailable(); q2.stop()
-    val audit = spark.read.parquet(s"$root/audit")
-    // every micro-batch logged the full four-check seam, keyed by run
-    val byRun = audit.collect()
-      .groupBy(_.getAs[Number]("job_run_id").longValue())
-      .map { case (k, rs) => k -> rs.map(_.getAs[String]("testCase")).sorted.toSeq }
-    assert(byRun == Map(
-      0L -> Seq("count_match", "data_match", "duplicate_check", "null_check"),
-      1L -> Seq("count_match", "data_match", "duplicate_check", "null_check")),
-      byRun.toString)
-    assert(audit.collect().forall(_.getAs[String]("testResult") == "PASSED"),
-      "the 1:1 as-of enrichment must pass all four checks")
-    assert(audit.collect().forall(_.getAs[String]("stage") == "STREAM_ASOF"))
+    SpecIo.withTempDir("graft_asof_audit") { root =>
+      val dim = Seq((7L, ts("2024-01-01 00:00:00"), 100L))
+        .toDF("item_id", "effective_from", "price")
+      val stream = MemoryStream[Click]
+      stream.addData(Click(7L, ts("2024-01-02 12:00:00"), "p1"),
+        Click(7L, ts("2024-01-03 12:00:00"), "p2"))
+      val q = Windowed.startAsOfEnrich(
+        stream.toDF().withColumnRenamed("user_id", "item_id"),
+        () => dim, "item_id", "click_ts", Seq("price"),
+        s"$root/out", s"$root/ckpt", auditPath = Some(s"$root/audit"))
+      q.processAllAvailable(); q.stop()
+      stream.addData(Click(7L, ts("2024-01-04 12:00:00"), "p3"))
+      val q2 = Windowed.startAsOfEnrich(
+        stream.toDF().withColumnRenamed("user_id", "item_id"),
+        () => dim, "item_id", "click_ts", Seq("price"),
+        s"$root/out", s"$root/ckpt", auditPath = Some(s"$root/audit"))
+      q2.processAllAvailable(); q2.stop()
+      val audit = spark.read.parquet(s"$root/audit")
+      // every micro-batch logged the full four-check seam, keyed by run
+      val byRun = audit.collect()
+        .groupBy(_.getAs[Number]("job_run_id").longValue())
+        .map { case (k, rs) => k -> rs.map(_.getAs[String]("testCase")).sorted.toSeq }
+      assert(byRun == Map(
+        0L -> Seq("count_match", "data_match", "duplicate_check", "null_check"),
+        1L -> Seq("count_match", "data_match", "duplicate_check", "null_check")),
+        byRun.toString)
+      assert(audit.collect().forall(_.getAs[String]("testResult") == "PASSED"),
+        "the 1:1 as-of enrichment must pass all four checks")
+      assert(audit.collect().forall(_.getAs[String]("stage") == "STREAM_ASOF"))
+    }
   }
 
   test("startAuditedSink writes idempotent batch-stamped output + dedup/null audits") {
     implicit val sqlCtx = spark.sqlContext
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_audited_sink").toString
-    val stream = MemoryStream[Doc]
-    stream.addData(
-      Doc(ts("2024-01-01 00:01:00"), "the cat sat"),
-      Doc(ts("2024-01-01 00:02:00"), "THE  CAT   SAT"), // dup → dropped upstream
-      Doc(ts("2024-01-01 00:03:00"), "another doc"))
-    val q = Windowed.startAuditedSink(
-      Windowed.dedupStream(stream.toDF(), "10 minutes"),
-      s"$root/out", s"$root/ckpt", s"$root/audit",
-      sourceName = "docs", stage = "STREAM_DEDUP",
-      notNullCols = Seq("text"))
-    q.processAllAvailable(); q.stop()
-    val out = spark.read.parquet(s"$root/out")
-    assert(out.count() == 2, "post-dedup batch must hold the two uniques")
-    assert(out.columns.contains("job_run_id"), "output is batch-stamped")
-    val audit = spark.read.parquet(s"$root/audit").collect()
-    val cases = audit.map(r =>
-      r.getAs[String]("testCase") -> r.getAs[String]("testResult")).toMap
-    assert(cases == Map("duplicate_check" -> "PASSED", "null_check" -> "PASSED"),
-      cases.toString)
-    assert(audit.forall(_.getAs[String]("stage") == "STREAM_DEDUP"))
+    SpecIo.withTempDir("graft_audited_sink") { root =>
+      val stream = MemoryStream[Doc]
+      stream.addData(
+        Doc(ts("2024-01-01 00:01:00"), "the cat sat"),
+        Doc(ts("2024-01-01 00:02:00"), "THE  CAT   SAT"), // dup → dropped upstream
+        Doc(ts("2024-01-01 00:03:00"), "another doc"))
+      val q = Windowed.startAuditedSink(
+        Windowed.dedupStream(stream.toDF(), "10 minutes"),
+        s"$root/out", s"$root/ckpt", s"$root/audit",
+        sourceName = "docs", stage = "STREAM_DEDUP",
+        notNullCols = Seq("text"))
+      q.processAllAvailable(); q.stop()
+      val out = spark.read.parquet(s"$root/out")
+      assert(out.count() == 2, "post-dedup batch must hold the two uniques")
+      assert(out.columns.contains("job_run_id"), "output is batch-stamped")
+      val audit = spark.read.parquet(s"$root/audit").collect()
+      val cases = audit.map(r =>
+        r.getAs[String]("testCase") -> r.getAs[String]("testResult")).toMap
+      assert(cases == Map("duplicate_check" -> "PASSED", "null_check" -> "PASSED"),
+        cases.toString)
+      assert(audit.forall(_.getAs[String]("stage") == "STREAM_DEDUP"))
+    }
   }
 
   test("streaming as-of enrichment joins the dim version in effect at each fact's time") {
     implicit val sqlCtx = spark.sqlContext
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_asof_stream").toString
-    // SCD2 chain for key 7: price 100 until Jan 2, then 200 (open)
-    val dim = Seq(
-      (7L, ts("2024-01-01 00:00:00"), 100L),
-      (7L, ts("2024-01-02 00:00:00"), 200L))
-      .toDF("item_id", "effective_from", "price")
-    val stream = MemoryStream[Click] // (user_id, click_ts, page) — reuse shape
-    val q = Windowed.startAsOfEnrich(
-      stream.toDF().withColumnRenamed("user_id", "item_id"),
-      () => dim, "item_id", "click_ts", Seq("price"),
-      s"$root/out", s"$root/ckpt")
-    stream.addData(
-      Click(7L, ts("2024-01-01 12:00:00"), "old"),   // version 1 in effect
-      Click(7L, ts("2024-01-03 12:00:00"), "new"))   // version 2 in effect
-    q.processAllAvailable(); q.stop()
-    // a second batch with a LATE fact must still match its own time
-    val stream2 = stream
-    stream2.addData(Click(7L, ts("2024-01-01 23:00:00"), "late"))
-    val q2 = Windowed.startAsOfEnrich(
-      stream2.toDF().withColumnRenamed("user_id", "item_id"),
-      () => dim, "item_id", "click_ts", Seq("price"),
-      s"$root/out", s"$root/ckpt")
-    q2.processAllAvailable(); q2.stop()
-    val out = spark.read.parquet(s"$root/out")
-      .collect().map(r => r.getAs[String]("page") -> r.getAs[Long]("asof_price")).toMap
-    assert(out == Map("old" -> 100L, "new" -> 200L, "late" -> 100L), out.toString)
+    SpecIo.withTempDir("graft_asof_stream") { root =>
+      // SCD2 chain for key 7: price 100 until Jan 2, then 200 (open)
+      val dim = Seq(
+        (7L, ts("2024-01-01 00:00:00"), 100L),
+        (7L, ts("2024-01-02 00:00:00"), 200L))
+        .toDF("item_id", "effective_from", "price")
+      val stream = MemoryStream[Click] // (user_id, click_ts, page) — reuse shape
+      val q = Windowed.startAsOfEnrich(
+        stream.toDF().withColumnRenamed("user_id", "item_id"),
+        () => dim, "item_id", "click_ts", Seq("price"),
+        s"$root/out", s"$root/ckpt")
+      stream.addData(
+        Click(7L, ts("2024-01-01 12:00:00"), "old"),   // version 1 in effect
+        Click(7L, ts("2024-01-03 12:00:00"), "new"))   // version 2 in effect
+      q.processAllAvailable(); q.stop()
+      // a second batch with a LATE fact must still match its own time
+      val stream2 = stream
+      stream2.addData(Click(7L, ts("2024-01-01 23:00:00"), "late"))
+      val q2 = Windowed.startAsOfEnrich(
+        stream2.toDF().withColumnRenamed("user_id", "item_id"),
+        () => dim, "item_id", "click_ts", Seq("price"),
+        s"$root/out", s"$root/ckpt")
+      q2.processAllAvailable(); q2.stop()
+      val out = spark.read.parquet(s"$root/out")
+        .collect().map(r => r.getAs[String]("page") -> r.getAs[Long]("asof_price")).toMap
+      assert(out == Map("old" -> 100L, "new" -> 200L, "late" -> 100L), out.toString)
+    }
   }
 
   test("versioned state envelope: a checkpoint written by the current layout " +
     "restores under a future version that claims a reserved slot") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val ckpt = java.nio.file.Files.createTempDirectory("env_ckpt").toString
-    val in = MemoryStream[Windowed.EwmaIn]
-    def ev(d: Int) = Windowed.EwmaIn("view", ts(f"2024-03-${d}%02d 00:00:00"))
-    // phase A — the "pre-change layout": the SHIPPED ewma machine writes
-    // state under StateVersion with the reserved slots at their defaults.
-    // foreachBatch sinks: the memory sink refuses checkpoint RECOVERY in
-    // Append mode, and recovery is exactly what phase B exercises.
-    val qa = Windowed.ewmaAnomalyStream(in.toDS())
-      .writeStream.outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Windowed.EwmaOut], _: Long) =>
-        b.count(); () // materialize: an unexecuted batch never commits state
-      }
-      .start()
-    in.addData(ev(1), ev(1), ev(2)) // day 1 closes at n=2; day 2 open at n=1
-    qa.processAllAvailable(); qa.stop()
-    // phase B — the "next field addition": a NEW state class
-    // (EwmaStateClaimed) with reservedA RENAMED to eventCount — same types,
-    // same positions — claims the slot as a cumulative post-upgrade event
-    // counter under version+1, and RESTARTS FROM PHASE A'S CHECKPOINT. This
-    // is the scenario the envelope exists for: the state schema check must
-    // accept the rename (it compares types, not names) and the restored
-    // envelope must carry phase A's exact state into the new layout.
-    val evolved = in.toDS()
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaStateClaimed, (String, Int, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        val prev = state.getOption.getOrElse(EwmaStateClaimed(
-          Windowed.StateVersion + 1, -1L, 0L, 0L, hasEwma = false))
-        val st = prev.copy(version = Windowed.StateVersion + 1,
-          eventCount = prev.eventCount + it.size)
-        state.update(st)
-        Iterator((key, prev.version, prev.day, prev.n, st.eventCount))
-      }
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long, Long, Long)]
-    val qb = evolved.writeStream.outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, Int, Long, Long, Long)], _: Long) =>
-        b.collect().foreach(got.add)
-      }
-      .start()
-    in.addData(ev(2), ev(2))
-    qb.processAllAvailable(); qb.stop()
-    import scala.jdk.CollectionConverters._
-    val rows = got.asScala.toSeq
-    val d0 = ts("2024-03-01 00:00:00").getTime / 86400000L
-    // restored: the OLD version stamp, day 2 open at n=1 (phase A's state,
-    // not a re-init), and the claimed slot counting phase B's two events
-    assert(rows == Seq(("view", Windowed.StateVersion, d0 + 1, 1L, 2L)),
-      s"restore must carry phase A state into the evolved logic: ${rows.mkString(",")}")
+    SpecIo.withTempDir("env_ckpt") { ckpt =>
+      val in = MemoryStream[Windowed.EwmaIn]
+      def ev(d: Int) = Windowed.EwmaIn("view", ts(f"2024-03-${d}%02d 00:00:00"))
+      // phase A — the "pre-change layout": the SHIPPED ewma machine writes
+      // state under StateVersion with the reserved slots at their defaults.
+      // foreachBatch sinks: the memory sink refuses checkpoint RECOVERY in
+      // Append mode, and recovery is exactly what phase B exercises.
+      val qa = Windowed.ewmaAnomalyStream(in.toDS())
+        .writeStream.outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[Windowed.EwmaOut], _: Long) =>
+          b.count(); () // materialize: an unexecuted batch never commits state
+        }
+        .start()
+      in.addData(ev(1), ev(1), ev(2)) // day 1 closes at n=2; day 2 open at n=1
+      qa.processAllAvailable(); qa.stop()
+      // phase B — the "next field addition": a NEW state class
+      // (EwmaStateClaimed) with reservedA RENAMED to eventCount — same types,
+      // same positions — claims the slot as a cumulative post-upgrade event
+      // counter under version+1, and RESTARTS FROM PHASE A'S CHECKPOINT. This
+      // is the scenario the envelope exists for: the state schema check must
+      // accept the rename (it compares types, not names) and the restored
+      // envelope must carry phase A's exact state into the new layout.
+      val evolved = in.toDS()
+        .groupByKey(_.event_type)
+        .flatMapGroupsWithState[EwmaStateClaimed, (String, Int, Long, Long, Long)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout) { (key, it, state) =>
+          val prev = state.getOption.getOrElse(EwmaStateClaimed(
+            Windowed.StateVersion + 1, -1L, 0L, 0L, hasEwma = false))
+          val st = prev.copy(version = Windowed.StateVersion + 1,
+            eventCount = prev.eventCount + it.size)
+          state.update(st)
+          Iterator((key, prev.version, prev.day, prev.n, st.eventCount))
+        }
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long, Long, Long)]
+      val qb = evolved.writeStream.outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, Int, Long, Long, Long)], _: Long) =>
+          b.collect().foreach(got.add)
+        }
+        .start()
+      in.addData(ev(2), ev(2))
+      qb.processAllAvailable(); qb.stop()
+      import scala.jdk.CollectionConverters._
+      val rows = got.asScala.toSeq
+      val d0 = ts("2024-03-01 00:00:00").getTime / 86400000L
+      // restored: the OLD version stamp, day 2 open at n=1 (phase A's state,
+      // not a re-init), and the claimed slot counting phase B's two events
+      assert(rows == Seq(("view", Windowed.StateVersion, d0 + 1, 1L, 2L)),
+        s"restore must carry phase A state into the evolved logic: ${rows.mkString(",")}")
+    }
   }
 
   test("listener records batch durations and ledger-parses kafka offsets") {
